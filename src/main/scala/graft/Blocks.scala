@@ -43,51 +43,35 @@ private[graft] object Blocks {
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
-  /** Eager `localCheckpoint()` that actually KEEPS the frame's hash
-    * partitioning visible to downstream plans, at a SIZE-AWARE partition
-    * count.
+  /** Eager `localCheckpoint()` that KEEPS the frame's hash partitioning
+    * visible to downstream plans, at a size-aware partition count.
     *
-    * Under AQE (the session default), the executed plan a checkpoint
-    * captures is an `AdaptiveSparkPlanExec`, and `LogicalRDD.fromDataset`
-    * reads its `outputPartitioning` as `UnknownPartitioning` — so every
-    * `repartition(k, key).localCheckpoint()` "pinned partitioning" frame
-    * in the iterative family silently lost its partitioning and every
-    * per-round join/aggregate re-exchanged it from scratch (measured at
-    * sf0.1: sccPivot re-shuffled the full 21 MB tagged edge frame TWICE
-    * per round; a post-checkpoint `groupBy(key)` planned 1 exchange
-    * instead of 0). Disabling AQE for just the checkpoint's own
-    * materialization restores the documented behavior — the cut plan is
-    * a deterministic exchange+narrow chain, while the per-round consumers
-    * (which keep running under AQE) reuse the partitioning instead of
-    * re-exchanging.
+    * When to pin: only when a consumer of the cut keys on the cut's own
+    * partitioning — a per-round join or aggregate on the `repartition`
+    * key, which then plans no exchange. A frame whose consumers key on
+    * anything else (a canonical `(a, b)` edge set read by degree joins
+    * and node-keyed semi-joins) gains nothing from the pin and pays for
+    * it, so it takes a plain `localCheckpoint()`.
     *
-    * The r15 lesson (driver verdict): AQE-off alone pins
-    * `spark.sql.shuffle.partitions` (= cpus in the bench session)
-    * partitions regardless of data size, and every downstream round
-    * inherits that width — at sf0.1 that flowed 32 near-empty partitions
-    * through every round of every iterative operator (citation family
-    * geomean 0.67 vs r14, and 8 cores BEAT 32). AQE's partition
-    * coalescing was the size-awareness; removing it must not remove the
-    * sizing. So the cut now derives an explicit, data-proportional
-    * partition count from its inputs' REAL sizes ([[cutPartitions]]:
-    * file bytes for scan leaves, block-manager bytes for already-pinned
-    * upstream cuts) and materializes under that `shuffle.partitions` —
-    * the floor (default 4) at sf0.1, thousands at 100 TB. The
-    * exchange-reuse benefit survives; the fixed-overhead explosion does
-    * not.
+    * Mechanism: under AQE a checkpoint captures an
+    * `AdaptiveSparkPlanExec`, whose `outputPartitioning` reads as
+    * `UnknownPartitioning`, so the cut materializes with AQE off. AQE's
+    * partition coalescing was the size-awareness, so the cut sets an
+    * explicit width from its inputs' real sizes ([[cutPartitions]]).
+    * Results are identical either way; only plan shape and partition
+    * counts change.
     *
-    * Results are bit-identical either way (the oracle pins this); only
-    * plan shape and partition counts change.
-    *
-    * Thread-safety: the conf flip is synchronized on the session (two
-    * interleaved cuts on one session could race set/restore); concurrent
-    * queries planned in the window would still observe AQE off — the
-    * harness mains are single-threaded, which this primitive assumes. */
+    * Thread-safety: the conf flip is synchronized on the session, but a
+    * query planned concurrently in the window still observes AQE off —
+    * the harness mains are single-threaded, which this primitive
+    * assumes. */
   def pinnedCut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // escape hatch (dev A/B probe + production fallback): pin=false
-    // makes the cut a plain AQE-governed localCheckpoint (the r14 shape)
-    if (!spark.conf.getOption("spark.graft.cut.pin").forall(_.toBoolean))
+    // makes the cut a plain AQE-governed localCheckpoint (the r14 shape);
+    // a value that is not a boolean reads as the default, never throws
+    if (!spark.conf.getOption("spark.graft.cut.pin")
+          .forall(v => scala.util.Try(v.trim.toBoolean).getOrElse(true)))
       return df.localCheckpoint()
     val n = cutPartitions(df)
     spark.synchronized {
@@ -105,8 +89,8 @@ private[graft] object Blocks {
 
   /** Data-proportional partition count for [[pinnedCut]]: the summed
     * REAL byte size of the frame's leaf inputs over the target partition
-    * size (`spark.graft.cut.partitionBytes`, default 64 MB), clamped to
-    * [1, 262144]. Leaf sizes come from facts, not optimizer guesses:
+    * size (`spark.graft.cut.partitionBytes`, a byte string, default
+    * `64m`), clamped to [1, 262144]. Leaf sizes come from facts, not optimizer guesses:
     * file-relation leaves report their actual file bytes; checkpointed
     * leaves (`LogicalRDD`) report their persisted block bytes from the
     * block manager (in-memory deserialized rows, so a conservative
@@ -124,27 +108,16 @@ private[graft] object Blocks {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     val spark = df.sparkSession
     val conf = spark.conf
-    val target = math.max(1L,
-      conf.getOption("spark.graft.cut.partitionBytes")
-        .map(_.toLong).getOrElse(64L * 1024 * 1024))
+    val target = math.max(1L, org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(conf.get("spark.graft.cut.partitionBytes", "64m")))
     // defaultSizeInBytes is the stats value of "no idea" (Long.MaxValue
     // unless the user lowered it) — treat anything that large as unknown.
-    // Byte confs stringify with a unit suffix ("...b"); parse the digits.
-    val unknown = BigInt(conf
-      .getOption("spark.sql.defaultSizeInBytes")
-      .map(_.takeWhile(_.isDigit)).filter(_.nonEmpty).map(_.toLong)
-      .getOrElse(Long.MaxValue))
-    lazy val storage = spark.sparkContext.getRDDStorageInfo
+    val unknown = BigInt(spark.sessionState.conf.defaultSizeInBytes)
+    def known(s: BigInt) = if (s >= unknown) BigInt(0) else s
     val sizes = df.queryExecution.optimizedPlan.collectLeaves().map {
-      case r: LogicalRDD =>
-        storage.find(_.id == r.rdd.id)
-          .map(i => BigInt(i.memSize) + BigInt(i.diskSize))
-          .getOrElse(BigInt(0))
-      case l: LogicalRelation =>
-        BigInt(l.relation.sizeInBytes)
-      case leaf =>
-        val s = leaf.stats.sizeInBytes
-        if (s >= unknown) BigInt(0) else s
+      case r: LogicalRDD => BigInt(blockBytes(spark, r.rdd.id).getOrElse(0L))
+      case l: LogicalRelation => known(BigInt(l.relation.sizeInBytes))
+      case leaf => known(leaf.stats.sizeInBytes)
     }
     val bytes = sizes.sum
     // the floor is > 1 by default: a 1-partition pinned frame satisfies
@@ -158,6 +131,21 @@ private[graft] object Blocks {
     if (bytes <= 0) conf.get("spark.sql.shuffle.partitions").toInt
     else ((bytes + target - 1) / target)
       .min(BigInt(262144)).max(BigInt(floor)).toInt
+  }
+
+  /** Persisted block bytes (memory + disk) of RDD `rddId`, or None when
+    * it holds no blocks (never materialized, or released). */
+  private def blockBytes(spark: SparkSession, rddId: Int): Option[Long] =
+    spark.sparkContext.getRDDStorageInfo.find(_.id == rddId)
+      .map(i => i.memSize + i.diskSize).filter(_ > 0)
+
+  /** [[blockBytes]] of the checkpoint backing `df` — the fact a
+    * size-conditional choice over a just-cut frame reads (kCore's
+    * broadcast of its degree table). None if `df` is not a direct
+    * checkpoint (same conservatism as [[release]]). */
+  def blockBytes(df: DataFrame): Option[Long] = df.queryExecution.analyzed match {
+    case l: LogicalRDD => blockBytes(df.sparkSession, l.rdd.id)
+    case _ => None
   }
 
   /** Unpersist the checkpointed RDD backing `df`, if `df` is the direct

@@ -33,15 +33,19 @@ object CostProbe {
     })
     // the listener bus is async; poll counters until stable for a grace
     // period instead of one fixed sleep — a fixed sleep can attribute
-    // query N's straggler stage events to query N+1 (ADVICE r15)
+    // query N's straggler stage events to query N+1. Capped at 10 s:
+    // periodic background jobs could otherwise keep it polling forever.
     def settle(): Unit = {
       var last = (jobs, stages, taskMs, sBytes, sRecs)
       var stableMs = 0
-      while (stableMs < 400) {
+      val deadline = System.nanoTime() + 10000000000L
+      while (stableMs < 400 && System.nanoTime() < deadline) {
         Thread.sleep(100)
         val now = (jobs, stages, taskMs, sBytes, sRecs)
         if (now == last) stableMs += 100 else { stableMs = 0; last = now }
       }
+      if (stableMs < 400)
+        println("[cost] warning: counters still moving after 10 s; next query may absorb events")
     }
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted

@@ -51,18 +51,16 @@ object Citations {
     * runtime small-side broadcast conversion. Measured at sf0.1:
     * citation_pagerank 9.16 s (pinned + shuffle_hash) vs 5.92 s (AQE
     * broadcast shape). So make the choice explicitly and
-    * deterministically from a row count the operator already paid for:
-    * broadcast when `rows × bytesPerRow` is provably under the session
-    * broadcast threshold, shuffle-hash otherwise. Results are identical
-    * either way (same join rows; aggregate order is already
-    * plan-dependent and both engines round to the published grid). */
-  private def probeSide(df: DataFrame, rows: Long,
-                        bytesPerRow: Long = 64L): DataFrame = {
-    val threshold = df.sparkSession.conf
-      .getOption("spark.sql.autoBroadcastJoinThreshold")
-      .map(_.takeWhile(_.isDigit)).filter(_.nonEmpty).map(_.toLong)
-      .getOrElse(10L * 1024 * 1024)
-    if (threshold > 0 && rows * bytesPerRow < threshold) broadcast(df)
+    * deterministically from a size the operator already paid for (a row
+    * count × 64, or a checkpoint's block bytes): broadcast when `bytes`
+    * is under the session's `autoBroadcastJoinThreshold` (read with its
+    * sign and unit; ≤ 0 never broadcasts), shuffle-hash otherwise.
+    * Results are identical either way (same join rows; aggregate order
+    * is already plan-dependent and both engines round to the published
+    * grid). */
+  private[graft] def probeSide(df: DataFrame, bytes: Long): DataFrame = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold > 0 && bytes < threshold) broadcast(df)
     else df.hint("shuffle_hash")
   }
 
@@ -200,28 +198,30 @@ object Citations {
     * The wedge count Σ d(d-1)/2 and the triangle count are exact
     * integers, so the derived clustering coefficient 3T/W rounds
     * identically across engines. */
-  /** Shared triangle machinery: the pinned undirected edge set, the
-    * degree table, and the closed-triangle row set (u, v1, v2) — one row
-    * per triangle, vertices NOT yet exploded. See [[citationTriangles]]
-    * for the orientation scale argument. */
-  private def triangleRows(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    // Pin the undirected edge set once (the citationReach pattern): FIVE
-    // downstream branches read it (two degree joins, both wedge sides,
-    // the closing-edge probe, the wedge total) — without the checkpoint
-    // each branch re-scans the source and re-runs the dedup exchange
-    // (measured: 4 FileScans at sf0.01). The harness sweeps the block
-    // between queries; long-lived sessions release via graft.Blocks.
-    val u = edges.where(col("src") =!= col("dst"))
+  /** Shared triangle machinery: the degree table and the
+    * closed-triangle row set (u, v1, v2) — one row per triangle,
+    * vertices NOT yet exploded. See [[citationTriangles]] for the
+    * orientation scale argument. */
+  private def triangleRows(edges: DataFrame): (DataFrame, DataFrame) =
+    orientedTriangles(undirected(edges))
+
+  /** The canonical undirected edge set (a < b, deduped, self-loops
+    * dropped), cut once with an eager plain checkpoint: every consumer
+    * re-reads it (degree aggregate and joins, wedge sides, closing-edge
+    * probe, peel semi-joins), and without the cut each would re-scan the
+    * source and re-run the dedup exchange. No consumer keys on its
+    * `(a, b)` layout, so it is not pinned ([[graft.Blocks.pinnedCut]]).
+    * The harness sweeps the block between queries; the peels release
+    * it via graft.Blocks. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .pinnedCut
-    val (deg, tri) = orientedTriangles(u)
-    (u, deg, tri)
-  }
+      .localCheckpoint()
 
   /** Degree table + closed-triangle rows (u, v1, v2) over an
-    * already-canonical PINNED edge set (a < b, deduped, checkpointed by
+    * already-canonical edge set (a < b, deduped, checkpointed by
     * the caller — every branch here re-reads it). Factored out of
     * [[triangleRows]] so iterative edge-peeling ([[kTruss]]) can re-run
     * the degree-oriented wedge enumeration per round on its shrinking
@@ -250,7 +250,7 @@ object Citations {
     (deg, tri)
   }
 
-  /** Per-edge triangle support over a canonical pinned edge set: each
+  /** Per-edge triangle support over a canonical checkpointed edge set: each
     * closed triangle (u, v1, v2) credits its three edges, re-canonicalized
     * (u is the low-DEGREE endpoint, not the low id). Integer counts —
     * no float discipline anywhere in the truss family. */
@@ -276,12 +276,9 @@ object Citations {
     * bounded, never deg² on a hot node) and drops under-supported edges;
     * edges on zero triangles vanish for free (inner-aggregate semantics:
     * they never appear in the support table). The edge set shrinks
-    * monotonically, so cut-count equality IS set equality — the [[kCore]]
-    * convergence trick — and the loop is convergence-or-throw at `rounds`
-    * (measured fixpoint: round 2 at sf0.001/0.01/0.1 AND the 10× soak
-    * graph — this family's peel does not cascade on lineitem-derived
-    * graphs; cap 6 = 3× headroom, same sizing rule as the trim cap in
-    * [[sccAll]], PLANS.md r12 probe).
+    * monotonically, so cut-count equality IS set equality, and the loop
+    * is convergence-or-throw: `rounds` caps the support recomputations,
+    * the one that confirms the fixpoint included.
     *
     * Returns the surviving edges with their in-truss support — recomputed
     * once on the converged (checkpointed) frame, so the returned plan is
@@ -292,11 +289,7 @@ object Citations {
   def kTruss(edges: DataFrame, k: Int = 3, rounds: Int = 6,
              roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .pinnedCut
+    var e = undirected(edges)
     var lastCut = e
     var prevEdges = e.count()
     var converged = false
@@ -506,7 +499,7 @@ object Citations {
   }
 
   def citationTriangles(edges: DataFrame): DataFrame = {
-    val (_, deg, tri) = triangleRows(edges)
+    val (deg, tri) = triangleRows(edges)
     val triCount = tri.agg(count(lit(1)).as("triangles"))
     val wedgeTotal = deg
       .agg((sum(col("d") * (col("d") - lit(1))) / lit(2)).cast("long").as("wedges"))
@@ -525,7 +518,7 @@ object Citations {
     * identically across engines; top-30 plans as TakeOrderedAndProject
     * with the id tie-break. */
   def citationLocalClustering(edges: DataFrame, k: Int = 30): DataFrame = {
-    val (_, deg, tri) = triangleRows(edges)
+    val (deg, tri) = triangleRows(edges)
     val perNode = tri
       .select(explode(array(col("u"), col("v1"), col("v2"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("triangles"))
@@ -576,9 +569,9 @@ object Citations {
     * (sources above `maxOutDegree` are dropped FIRST, so the per-citer
     * fan-out is bounded by construction and the cap is part of the
     * operator contract, mirrored in the oracle); the capped+weighted
-    * edge frame is computed ONCE and pinned (the [[triangleRows]]
-    * pattern — the cocitation pinned-exchange trick can't apply here
-    * because only the a-side keeps `term`, so the two sides prune to
+    * edge frame is computed ONCE and pinned (the cocitation
+    * pinned-exchange trick can't apply here because only the a-side
+    * keeps `term`, so the two sides prune to
     * DIFFERENT subtrees and ReuseExchange never fires; measured: the
     * un-pinned plan scans the edge source twice). The self-join then
     * exchanges both sides of the pinned frame (the re-aliased side's
@@ -916,7 +909,7 @@ object Citations {
       val contribs = e
         .join(probeSide(ranks.where(col("deg").isNotNull)
           .select(col("id"), (col("rank") / col("deg")).as("share")),
-          rows = n.toLong),
+          n.toLong * 64),
           e("src") === col("id"))
         .groupBy(col("dst")).agg(sum(col("share")).as("inbox"))
       val next = nodesWithDeg
@@ -984,7 +977,7 @@ object Citations {
       val contribs = e
         .join(probeSide(ranks.where(col("deg").isNotNull)
           .select(col("id"), (col("rank") / col("deg")).as("share")),
-          rows = n),
+          n * 64),
           e("src") === col("id"))
         .groupBy(col("dst")).agg(sum(col("share")).as("inbox"))
       val next = base
@@ -1088,74 +1081,62 @@ object Citations {
   /** k-core of the undirected citation graph by peeling (Seidman, Social
     * Networks 5, 1983): repeatedly drop every node whose degree in the
     * SURVIVING subgraph is below k; what remains at convergence is the
-    * k-core, the standard "dense backbone" extraction. The loop runs to
-    * DETECTED convergence (≤ `rounds`, throws beyond — the components
-    * discipline): semi-joins only ever REMOVE edges, so an unchanged
-    * edge COUNT on the round's checkpoint proves an unchanged edge SET —
-    * convergence detection is one count on a frame the loop
-    * materializes anyway, no extra join, no flag column. Measured: the
-    * sf0.1 peel converges after ONE round (degree-1 fringe only, no
-    * cascade), so the previous fixed-8 loop spent 7 rounds on no-ops —
-    * 6.4 s of which the detection loop keeps ~2 (the hand fixture in
-    * AnalyticsExtraSpec still exercises a 2-cascade peel). Everything is
-    * integer arithmetic on exact degree counts — no float discipline
-    * needed, the hash oracle exact by construction.
+    * k-core, the standard "dense backbone" extraction.
     *
-    * ORACLE VALIDITY: the DuckDB twin stays the peel unrolled to 8
-    * MATERIALIZED rounds ([[kCoreSql]]); extra oracle rounds on a
-    * converged frame are no-ops by the same only-removes argument, so
-    * both engines emit the unique k-core whenever Spark's loop converges
-    * inside the cap (it throws otherwise) and the cap covers the
-    * oracle's 8 (verified: round-1 convergence at sf0.01 AND sf0.1).
+    * Each round checkpoints the surviving subgraph's degree table. If no
+    * node in it has degree < k, the subgraph is the k-core and that
+    * table IS the answer (the fixpoint costs one `isEmpty` probe, no
+    * confirming peel and no edge counts). Otherwise the round peels: two
+    * semi-joins of the edge frame against the qualifying nodes, which
+    * are broadcast when the table's block bytes are under the session
+    * broadcast threshold ([[probeSide]]) and shuffle-hashed otherwise.
+    * Convergence-or-throw: `rounds` caps the peels; a graph that still
+    * has a degree-< k node after `rounds` peels throws. Everything is
+    * integer arithmetic on exact degree counts — the hash oracle is
+    * exact by construction.
+    *
+    * ORACLE VALIDITY: the DuckDB twin is the peel unrolled to 8
+    * MATERIALIZED rounds ([[kCoreSql]]); peels on a converged frame are
+    * no-ops (semi-joins only remove edges), so both engines emit the
+    * unique k-core whenever Spark converges within the default cap of 8
+    * peels (it throws otherwise).
     *
     * Scale shape: each round is ONE degree aggregate (both endpoints
     * unioned, map-side combine collapses to distinct nodes per partition
-    * before the exchange) plus two semi-joins of the edge frame against
-    * the qualifying-node frame — every frame linear in surviving edges,
-    * nothing quadratic, no driver loop over data. The iterative lineage
-    * is cut EVERY round with each superseded cut released immediately
-    * (graft.Blocks): a round references its predecessor THREE times
-    * (degree scan + two semi-join probes) and exchange reuse does not
-    * fire across the references (the [[hits]] measurement). NO
-    * shuffle_hash hint on the semi-joins, unlike pageRank/hits —
-    * measured: hinted ran 14.9 s vs 8.0 s sort-merge at sf0.1; this e
-    * SHRINKS every round and both joins key on it, so sort-merge
-    * amortizes one sort of the surviving frame while SHJ re-hashes both
-    * sides every round. */
+    * before the exchange) plus two semi-joins keyed on a node id — every
+    * frame linear in surviving edges, nothing quadratic, no local loop
+    * over collected data. The edge frame (read by the degree aggregate and the
+    * peel) and the degree table (read by the convergence probe and both
+    * semi-joins) are cut every round — exchange reuse does not fire
+    * across such references, the [[hits]] measurement — and each
+    * superseded cut is released immediately (graft.Blocks). */
   def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 8,
             roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    var e = und.pinnedCut
-    var lastCut = e
-    var prevEdges = e.count()
-    var converged = false
+    def degrees(e: DataFrame) = e.select(col("a").as("node"))
+      .unionAll(e.select(col("b").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint()
+    var e = undirected(edges)
+    var deg = degrees(e)
     var i = 0
-    while (!converged && i < rounds) {
+    while (!deg.where(col("deg") < k).isEmpty) {
+      if (i == rounds) throw new IllegalStateException(
+        s"kCore did not converge in $rounds peel rounds; raise the cap")
       i += 1
-      val ok = e.select(col("a").as("node"))
-        .unionAll(e.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .select(col("node"))
+      val ok = probeSide(deg.where(col("deg") >= k).select(col("node")),
+        graft.Blocks.blockBytes(deg).getOrElse(Long.MaxValue))
       val next = e
         .join(ok.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(ok.select(col("node").as("b")), Seq("b"), "left_semi")
       val cut = next.localCheckpoint() // eager — materialized before release
-      val n = cut.count() // checkpoint scan; = edge set equality (see doc)
-      roundProbe(i, next, () => n)
-      graft.Blocks.release(lastCut)
-      lastCut = cut
+      roundProbe(i, next, () => cut.count())
+      graft.Blocks.release(e)
+      graft.Blocks.release(deg)
       e = cut
-      converged = n == prevEdges
-      prevEdges = n
+      deg = degrees(e)
     }
-    if (!converged) throw new IllegalStateException(
-      s"kCore did not converge in $rounds peel rounds; raise the cap")
-    e.select(col("a").as("paper_id")).unionAll(e.select(col("b").as("paper_id")))
-      .groupBy(col("paper_id")).agg(count(lit(1)).as("core_deg"))
+    graft.Blocks.release(e)
+    deg.select(col("node").as("paper_id"), col("deg").as("core_deg"))
   }
 
   /** DuckDB twin of [[kCore]]: the bounded peel UNROLLED one CTE per round

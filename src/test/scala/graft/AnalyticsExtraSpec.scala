@@ -189,6 +189,75 @@ class AnalyticsExtraSpec extends AnyFunSuite {
     assert(Citations.kCore(edges, k = 3).count() === 0L)
   }
 
+  // triangle {1,2,3} + pendant chain 3-10-11-...-17: the chain peels
+  // one node per round from its tip, so the 2-core needs exactly 8 peels
+  private lazy val chain8 = {
+    val chain = (3 +: (10 to 17)).sliding(2).map(p => (p(0), p(1))).toSeq
+    (Seq((1, 2), (2, 3), (3, 1)) ++ chain).toDF("l_orderkey", "l_partkey")
+  }
+  private def chainEdges = chain8.select(col("l_orderkey").cast("string").as("src"),
+    col("l_partkey").cast("string").as("dst"))
+
+  test("kCore: rounds caps real peels — an 8-peel chain converges at 8, throws at 7") {
+    val got = Citations.kCore(chainEdges, rounds = 8).as[(String, Long)].collect().sorted.toSeq
+    assert(got === Seq(("1", 2L), ("2", 2L), ("3", 2L)))
+    // the default cap is 8 peels
+    assert(Citations.kCore(chainEdges).as[(String, Long)].collect().sorted.toSeq === got)
+    intercept[IllegalStateException](Citations.kCore(chainEdges, rounds = 7))
+  }
+
+  test("kCoreSql: the 8-round unroll covers kCore's default cap (DuckDB)") {
+    // the twin runs on DuckDB exactly as the oracle gate runs it: 8
+    // unrolled rounds reach the 8-peel fixpoint kCore accepts by default,
+    // 7 do not — so the twin's depth is exactly what the cap needs
+    val dir = java.nio.file.Files.createTempDirectory("kcore_chain").toString
+    chain8.coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem")
+    val run = """import duckdb, sys
+      |con = duckdb.connect()
+      |con.execute("CREATE VIEW lineitem AS SELECT * FROM read_parquet('"
+      |            + sys.argv[1] + "/lineitem/*.parquet')")
+      |for r in con.execute(sys.stdin.read()).fetchall():
+      |    print(f"{r[0]}\t{r[1]}")""".stripMargin
+    def twin(rounds: Int): Seq[(String, Long)] = {
+      import scala.sys.process._
+      val sql = new java.io.ByteArrayInputStream(
+        Citations.kCoreSql(rounds = rounds).getBytes("UTF-8"))
+      (Seq("python3", "-c", run, dir) #< sql).!!.linesIterator.map { l =>
+        val Array(id, d) = l.split('\t'); (id, d.toLong)
+      }.toSeq.sorted
+    }
+    val spark8 = Citations.kCore(chainEdges).as[(String, Long)].collect().sorted.toSeq
+    try {
+      assert(Citations.kCoreSql() === Citations.kCoreSql(rounds = 8))
+      assert(twin(8) === spark8)
+      assert(twin(7) !== spark8)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  // Partition-width invariance for the triangle/peel family: cut widths,
+  // AQE coalescing and broadcast choices move plan shape, never results —
+  // every column of every row must match at shuffle.partitions 1, 4, 8.
+  private def rowsAtWidth(query: String, width: Int): Seq[String] = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, width.toString)
+    try {
+      val df = SparkEntry.queries(query)(spark, sf)
+      df.select(df.columns.sorted.map(df.col): _*)
+        .collect().map(_.toString).sorted.toSeq
+    } finally spark.conf.set(key, prev)
+  }
+
+  for (q <- Seq("citation_triangles", "citation_local_clustering",
+                "citation_ktruss", "citation_kcore"))
+    test(s"$q: identical rows at shuffle.partitions 1/4/8") {
+      val base = rowsAtWidth(q, 1)
+      assert(base.nonEmpty, s"$q returned no rows at sf0.001")
+      Seq(4, 8).foreach { w =>
+        assert(rowsAtWidth(q, w) === base, s"$q differs at shuffle.partitions=$w")
+      }
+    }
+
   test("events_transitions: transition total equals sessionize's sum(n_events - 1)") {
     // every transition is one consecutive-within-session pair, so the
     // matrix total must equal Σ_sessions (n_events - 1) — a differential

@@ -1,16 +1,24 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint, SHUFFLE_HASH}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Citations
 
 /** Focused spec for the r16 size-aware [[Blocks.pinnedCut]] internals:
   * the cut must (a) keep the hash partitioning visible downstream,
   * (b) derive its partition count from real leaf bytes / target with
   * the floor clamp, (c) remove the downstream exchange on the pinned
   * key, (d) be a plain AQE checkpoint under `spark.graft.cut.pin=false`,
-  * and (e) never change results. */
+  * and (e) never change results — plus the conf and size parsing the
+  * cut and [[Citations.probeSide]] share: byte confs honor sign and
+  * unit, unknown sizes never read as huge, malformed confs never throw. */
 class PinnedCutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -107,5 +115,77 @@ class PinnedCutSpec extends AnyFunSuite {
     val n = Blocks.cutPartitions(cp.repartition(col("k")))
     assert(n == spark.conf.get("spark.sql.shuffle.partitions").toInt,
       s"expected fallback to session shuffle partitions, got $n")
+  }
+
+  test("cut width parses spark.graft.cut.partitionBytes as a byte string") {
+    val df = src.repartition(col("k"))
+    val plain = withConf("spark.graft.cut.partitionBytes" -> "1024") {
+      Blocks.cutPartitions(df)
+    }
+    val unit = withConf("spark.graft.cut.partitionBytes" -> "1k") {
+      Blocks.cutPartitions(df)
+    }
+    assert(plain > 4 && unit === plain, s"1024 -> $plain but 1k -> $unit")
+    // the documented default spelled out: tiny frame -> the floor
+    withConf("spark.graft.cut.partitionBytes" -> "64m") {
+      assert(Blocks.cutPartitions(df) === 4)
+    }
+  }
+
+  test("a LogicalRelation reporting defaultSizeInBytes counts as unknown size") {
+    // a non-file relation (JDBC-like) that does not override sizeInBytes
+    // reports the session's defaultSizeInBytes (Long.MaxValue): the cut
+    // must fall back to the session width, not clamp to 262144
+    val rel = new BaseRelation with TableScan {
+      override def sqlContext = spark.sqlContext
+      override def schema = StructType(Seq(StructField("k", StringType)))
+      override def buildScan() = spark.sparkContext.parallelize(Seq(Row("a")))
+    }
+    val n = Blocks.cutPartitions(spark.baseRelationToDataFrame(rel))
+    assert(n == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"expected fallback to session shuffle partitions, got $n")
+  }
+
+  test("a malformed spark.graft.cut.pin reads as the default and still pins") {
+    withConf("spark.graft.cut.pin" -> "no") {
+      val cut = Blocks.pinnedCut(src.repartition(col("k")))
+      cut.queryExecution.analyzed match {
+        case l: LogicalRDD =>
+          assert(l.outputPartitioning.isInstanceOf[HashPartitioning],
+            s"malformed pin must keep the default, got ${l.outputPartitioning}")
+        case other => fail(s"not a LogicalRDD: $other")
+      }
+      Blocks.release(cut)
+    }
+  }
+
+  private def probeHint(df: DataFrame): String =
+    df.queryExecution.analyzed.collectFirst {
+      case h: ResolvedHint if h.hints.strategy.isDefined => h.hints.strategy.get
+    } match {
+      case Some(BROADCAST) => "broadcast"
+      case Some(SHUFFLE_HASH) => "shuffle_hash"
+      case other => fail(s"unexpected probe-side hint $other")
+    }
+
+  test("probeSide: autoBroadcastJoinThreshold -1 never broadcasts") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(probeHint(Citations.probeSide(src, 1L)) === "shuffle_hash")
+      assert(probeHint(Citations.probeSide(src, 0L)) === "shuffle_hash")
+    }
+  }
+
+  test("probeSide: autoBroadcastJoinThreshold 10MB is ten mebibytes") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "10MB") {
+      assert(probeHint(Citations.probeSide(src, 5L * 1024 * 1024)) === "broadcast")
+      assert(probeHint(Citations.probeSide(src, 10L * 1024 * 1024)) === "shuffle_hash")
+    }
+  }
+
+  test("probeSide: autoBroadcastJoinThreshold 1g is one gibibyte") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "1g") {
+      assert(probeHint(Citations.probeSide(src, 512L * 1024 * 1024)) === "broadcast")
+      assert(probeHint(Citations.probeSide(src, 2L * 1024 * 1024 * 1024)) === "shuffle_hash")
+    }
   }
 }
