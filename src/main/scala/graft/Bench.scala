@@ -26,9 +26,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // target environment is local[32] (one executor thread per core) —
     // session config, checksum, and median are BenchKit's single
-    // definitions, shared with CadenceSweep so "bench conditions" is a
-    // structural guarantee. periodicGC moved OUT of the run window
-    // (30 min): sweepAll's explicit System.gc() between executions
+    // definitions, shared with the other harness mains so "bench
+    // conditions" is a structural guarantee. periodicGC moved OUT of the
+    // run window (30 min): sweepAll's explicit System.gc() between executions
     // already drains the cleaner queue deterministically, so the 60 s
     // timer's only bench-visible effect was a full GC landing inside a
     // timed run (the r11 full-bench-only scc-inflation suspect).

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
-/** Shared measurement plumbing for the driver-facing mains (Bench,
-  * CadenceSweep, Verify, PlanDump). One definition of the session
+/** Shared measurement plumbing for the harness mains (Bench, Soak,
+  * ExplainDump). One definition of the session
   * config, the order-insensitive checksum, and the median keeps
   * "measured under bench conditions" structural: a config or checksum
   * change lands in every harness at once instead of silently

@@ -16,11 +16,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the signature of block pressure, not plan regressions.
   *
   * Two remedies, both here:
-  *  - [[release]] frees ONE checkpointed frame's blocks — iterative
-  *    operators call it on each superseded iterate as soon as the next
-  *    checkpoint has materialized (pageRank, k-means, PQ codebooks,
-  *    label propagation), so peak footprint is O(one iterate), not
-  *    O(iterations).
+  *  - [[release]] frees ONE checkpointed frame's blocks. Inside the
+  *    iterative loops its one caller is [[Fixpoint]], which frees each
+  *    superseded iterate as soon as the next checkpoint has materialized
+  *    (pageRank, k-means, PQ codebooks, label propagation), so peak
+  *    footprint is O(one iterate), not O(iterations); operators call it
+  *    directly only for the frames they set up around a loop.
   *  - [[sweepAll]] frees every persisted RDD in the session — harness
   *    code (Bench) calls it between query executions so no run inherits
   *    the previous one's blocks. Callers must not hold live references
@@ -33,7 +34,7 @@ private[graft] object Blocks {
     * ("cannot be recomputed after unpersisting") — in the harness mains
     * that is pure by-design noise (~100 queries' worth of deliberate
     * releases would drown the captured output tail), so Bench/Verify/
-    * CadenceSweep/Soak call this to silence exactly that logger. It is
+    * Soak call this to silence exactly that logger. It is
     * deliberately NOT a static init: a library must not reconfigure
     * logging as an import side effect, and in a user session the WARN is
     * the one early signal if a future code path ever releases a frame
@@ -150,7 +151,8 @@ private[graft] object Blocks {
 
   /** Unpersist the checkpointed RDD backing `df`, if `df` is the direct
     * result of a `localCheckpoint()`/`checkpoint()` call (its analyzed
-    * plan is the `LogicalRDD` the checkpoint wrapped). No-op otherwise —
+    * plan is the `LogicalRDD` the checkpoint wrapped). Inside an
+    * iterative loop, [[Fixpoint]] is the caller. No-op otherwise —
     * deliberately conservative: derived frames share the parent's RDD,
     * and releasing through a derivation would free blocks the parent
     * still owns. Async (`blocking = false`): the freeing races nothing —

@@ -47,15 +47,19 @@ object ExplainDump {
 
     // the listener bus is async and private[spark]; poll the counters
     // until they are stable for a grace period instead of a fixed sleep
-    // (a fixed sleep can attribute query N's straggler events to N+1)
+    // (a fixed sleep can attribute query N's straggler events to N+1),
+    // giving up after 10 s so a steady event stream cannot hang the dump
     def settle(): Unit = {
       var last = (jobs, stages, tasks, taskMs)
       var stableMs = 0
-      while (stableMs < 400) {
+      val deadline = System.nanoTime() + 10000000000L
+      while (stableMs < 400 && System.nanoTime() < deadline) {
         Thread.sleep(100)
         val now = (jobs, stages, tasks, taskMs)
         if (now == last) stableMs += 100 else { stableMs = 0; last = now }
       }
+      if (stableMs < 400)
+        println("[plan] warning: counters still moving after 10 s; next query may absorb events")
     }
 
     names.foreach { n =>

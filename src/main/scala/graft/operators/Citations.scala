@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixpoint, Tables}
 
 /** Citation analysis — the reference's entire workload, Spark-first.
   *
@@ -22,21 +22,6 @@ import graft.Tables
   * reference's global full sort (master/master.py:218).
   */
 object Citations {
-
-  /** Default per-round probe for the iterative operators: do nothing.
-    * IterativePlanSpec injects a real probe to audit each round's UN-CUT
-    * plan — the cadence checkpoints replace lineage with a `LogicalRDD`,
-    * so the per-round join/aggregate shapes (exactly the plans that
-    * matter at 100×) are otherwise invisible to any post-hoc audit. The
-    * probe receives the round's UN-CUT `next` frame (for plan capture —
-    * planning a DataFrame is side-effect-free) plus a COUNT THUNK: where
-    * the operator already materialized the round (a checkpoint cut or a
-    * convergence count), the thunk reads those blocks — it never
-    * recomputes the round's join tree (ADVICE r10: a probe-side
-    * `df.count()` on the pre-cut frame executed every round twice,
-    * inflating the dt the tool exists to measure). Production pays one
-    * no-op call per round. */
-  val noProbe: (Int, DataFrame, () => Long) => Unit = (_, _, _) => ()
 
   /** Size-conditional probe side for a per-round join against a PINNED
     * frame (guide §3.1: broadcast the side that fits, deliberately).
@@ -286,30 +271,17 @@ object Citations {
     * lineage. Scale: per round one dedup-free degree aggregate + the
     * oriented wedge join; every exchange keys on a node id or a canonical
     * edge pair. */
-  def kTruss(edges: DataFrame, k: Int = 3, rounds: Int = 6,
-             roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int = 3, rounds: Int = 6): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = undirected(edges)
-    var lastCut = e
-    var prevEdges = e.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
-      i += 1
-      val next = edgeSupport(e)
-        .where(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-      val cut = next.localCheckpoint() // eager — materialized before release
-      val n = cut.count() // checkpoint scan; = edge-set equality (monotone)
-      roundProbe(i, next, () => n)
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      e = cut
-      converged = n == prevEdges
-      prevEdges = n
+    val e0 = undirected(edges)
+    val (e, _, _) = Fixpoint.converge("kTruss", rounds, (e0, e0.count(), false))(_._3) {
+      case (r, (e, prevEdges, _)) =>
+        val cut = r.cut(edgeSupport(e)
+          .where(col("support") >= k - 2)
+          .select(col("a"), col("b")))
+        val n = cut.count() // checkpoint scan; = edge-set equality (monotone)
+        (cut, n, n == prevEdges)
     }
-    if (!converged) throw new IllegalStateException(
-      s"kTruss did not converge in $rounds peel rounds; raise the cap")
     edgeSupport(e)
   }
 
@@ -360,26 +332,22 @@ object Citations {
       .repartition(col("src")).pinnedCut
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
-    var balls = nodes.groupBy(col("id"))
+    val balls0 = nodes.groupBy(col("id"))
       .agg(hll_sketch_agg(col("id"), lit(lgK)).as("ball"))
       .localCheckpoint()
-    perHop(0, balls)
-    var lastCut = balls
-    for (h <- 1 to hops) {
+    perHop(0, balls0)
+    val balls = Fixpoint.rounds(hops, balls0) { (r, balls) =>
       val inbox = e
         .join(balls.select(col("id").as("u"), col("ball").as("nb"))
           .hint("shuffle_hash"), e("src") === col("u"))
         .groupBy(e("dst").as("id"))
         .agg(hll_union_agg(col("nb")).as("nb"))
-      val next = balls.join(inbox, Seq("id"), "left_outer")
+      val cut = r.cut(balls.join(inbox, Seq("id"), "left_outer")
         .select(balls("id"),
           when(col("nb").isNull, col("ball"))
-            .otherwise(hll_union(col("ball"), col("nb"))).as("ball"))
-      val cut = next.localCheckpoint() // eager — materialized pre-release
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      balls = cut
-      perHop(h, balls)
+            .otherwise(hll_union(col("ball"), col("nb"))).as("ball")))
+      perHop(r.i, cut)
+      cut
     }
     graft.Blocks.release(e)
     balls
@@ -847,20 +815,19 @@ object Citations {
     * engines); invariants are spec-tested in AnalyticsExtraSpec, values
     * pinned by a closed-form fixture. */
   def pageRank(edges: DataFrame, iterations: Int = 10,
-               damping: Double = 0.85, checkpointEvery: Int = 3,
-               roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+               damping: Double = 0.85): DataFrame = {
     // Static sides pinned once: without the eager checkpoints every
     // round's materialization would re-run the ENTIRE lineage back to the
     // scan, turning O(iters) work into O(iters²).
     //
-    // checkpointEvery trades job-launch overhead against recompute: each
-    // un-checkpointed round's plan references the previous ranks TWICE
-    // (dangling scan + contribs join), so chaining k rounds between cuts
-    // re-executes the oldest round up to 2^(k-1) times inside one job —
-    // but saves k-1 materialization jobs. Measured under BENCH conditions
-    // (graft.CadenceSweep: local[32], sf0.1, checksum materialization,
-    // median of 3 after an untimed warm-up, two independent JVMs — table
-    // in BASELINE.md): every-round ~9.7-10.8 s, every-2/3/4 all ~8-9 s
+    // The cut cadence (3) trades job-launch overhead against recompute:
+    // each un-checkpointed round's plan references the previous ranks
+    // TWICE (dangling scan + contribs join), so chaining k rounds between
+    // cuts re-executes the oldest round up to 2^(k-1) times inside one job
+    // — but saves k-1 materialization jobs. Measured under BENCH
+    // conditions (local[32], sf0.1, checksum materialization, median of 3
+    // after an untimed warm-up, two independent JVMs — table in
+    // BASELINE.md): every-round ~9.7-10.8 s, every-2/3/4 all ~8-9 s
     // and statistically indistinguishable from each other. So the real,
     // reproducible effect is "any cadence >= 2 beats every-round by
     // ~15-20%"; finer distinctions are inside run-to-run noise (earlier
@@ -876,10 +843,10 @@ object Citations {
     // reads) beat any single pinned width at the measured scale — r16
     // A/B at sf0.1: pinned floor-4 9.92 s / floor-8 9.73 / r15's 32-wide
     // 17.16 vs 5.92 s for this shape (the pin also adds ~5 AQE query
-    // stages per round: 129 vs 76 stages per execution, PrProbe). The
-    // at-scale trade is the per-round edge re-exchange this re-admits —
-    // but that exchange is AQE-sized and the measured ground truth says
-    // the pin costs ~70% wall here; see OPTIMIZATION_r16.md.
+    // stages per round: 129 vs 76 stages per execution). The at-scale
+    // trade is the per-round edge re-exchange this re-admits — but that
+    // exchange is AQE-sized and the measured ground truth says the pin
+    // costs ~70% wall here; see OPTIMIZATION_r16.md.
     val e = edges.repartition(col("src")).localCheckpoint()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
@@ -890,14 +857,9 @@ object Citations {
     // checkpointed frame (no join)
     val nodesWithDeg = nodes.join(outDeg, Seq("id"), "left_outer")
       .localCheckpoint()
-    var ranks = nodesWithDeg.select(col("id"), col("deg"),
+    val ranks0 = nodesWithDeg.select(col("id"), col("deg"),
       lit(1.0 / n).as("rank")).localCheckpoint()
-    // the previous cut's blocks are dead the moment the next cut has
-    // materialized — release them then, so the loop's block-manager
-    // footprint is O(one rank frame), not O(iterations / cadence)
-    // frames (graft.Blocks has the leak numbers)
-    var lastCut = ranks
-    for (i <- 1 to iterations) {
+    val ranks = Fixpoint.rounds(iterations, ranks0, every = 3) { (r, ranks) =>
       // dangling mass as a broadcast scalar FRAME, not a driver collect:
       // folding it into the round's plan keeps each round a single job
       val dangling = broadcast(ranks.where(col("deg").isNull)
@@ -919,13 +881,7 @@ object Citations {
           (lit((1 - damping) / n) +
             lit(damping) * (coalesce(col("inbox"), lit(0.0)) +
               col("dm") / lit(n))).as("rank"))
-      roundProbe(i, next, () => next.count())
-      ranks = if (i % checkpointEvery == 0 || i == iterations) {
-        val cut = next.localCheckpoint() // eager: materialized before the release below
-        graft.Blocks.release(lastCut)
-        lastCut = cut
-        cut
-      } else next
+      r.cut(next)
     }
     // the final cut is a lineage-free LogicalRDD — the returned frame no
     // longer references the edge / degree frames, so their blocks go too
@@ -949,9 +905,8 @@ object Citations {
     * frame, shuffle_hash on the node-scale rank side, cadence-3 cuts
     * with immediate release. */
   def personalizedPageRank(edges: DataFrame, seedK: Int = 5,
-                           iterations: Int = 6, damping: Double = 0.85,
-                           checkpointEvery: Int = 3,
-                           roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+                           iterations: Int = 6,
+                           damping: Double = 0.85): DataFrame = {
     // plain AQE cut, not pinnedCut — the pageRank rationale above
     // (measured at sf0.1: pinned 6.85-7.72 s vs 5.05 s for this shape)
     val e = edges.repartition(col("src")).localCheckpoint()
@@ -968,10 +923,9 @@ object Citations {
       .select(col("id"), col("deg"), coalesce(col("s"), lit(0.0)).as("s"))
       .localCheckpoint()
     val n = base.count() // node count: probeSide sizing (persisted scan)
-    var ranks = base.select(col("id"), col("deg"), col("s"),
+    val ranks0 = base.select(col("id"), col("deg"), col("s"),
       col("s").as("rank")).localCheckpoint()
-    var lastCut = ranks
-    for (i <- 1 to iterations) {
+    val ranks = Fixpoint.rounds(iterations, ranks0, every = 3) { (r, ranks) =>
       val dangling = broadcast(ranks.where(col("deg").isNull)
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm")))
       val contribs = e
@@ -987,13 +941,7 @@ object Citations {
           (lit(1 - damping) * col("s") +
             lit(damping) * (coalesce(col("inbox"), lit(0.0)) +
               col("dm") * col("s"))).as("rank"))
-      roundProbe(i, next, () => next.count())
-      ranks = if (i % checkpointEvery == 0 || i == iterations) {
-        val cut = next.localCheckpoint() // eager — materialized before release
-        graft.Blocks.release(lastCut)
-        lastCut = cut
-        cut
-      } else next
+      r.cut(next)
     }
     graft.Blocks.release(e)
     graft.Blocks.release(base)
@@ -1110,32 +1058,26 @@ object Citations {
     * semi-joins) are cut every round — exchange reuse does not fire
     * across such references, the [[hits]] measurement — and each
     * superseded cut is released immediately (graft.Blocks). */
-  def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 8,
-            roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
-    def degrees(e: DataFrame) = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    var e = undirected(edges)
-    var deg = degrees(e)
-    var i = 0
-    while (!deg.where(col("deg") < k).isEmpty) {
-      if (i == rounds) throw new IllegalStateException(
-        s"kCore did not converge in $rounds peel rounds; raise the cap")
-      i += 1
-      val ok = probeSide(deg.where(col("deg") >= k).select(col("node")),
-        graft.Blocks.blockBytes(deg).getOrElse(Long.MaxValue))
-      val next = e
-        .join(ok.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(ok.select(col("node").as("b")), Seq("b"), "left_semi")
-      val cut = next.localCheckpoint() // eager — materialized before release
-      roundProbe(i, next, () => cut.count())
-      graft.Blocks.release(e)
-      graft.Blocks.release(deg)
-      e = cut
-      deg = degrees(e)
+  def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 8): DataFrame = {
+    // a round cuts the degree table of its edge set, then either finds no
+    // degree-< k node (the state becomes that table: converged) or peels;
+    // the cap is `rounds` peels plus the round that confirms the core
+    val (deg, _) = Fixpoint.converge("kCore", rounds + 1, (undirected(edges), false))(_._2) {
+      case (r, (e, _)) =>
+        val deg = r.cut(e.select(col("a").as("node"))
+          .unionAll(e.select(col("b").as("node")))
+          .groupBy(col("node")).agg(count(lit(1)).as("deg")))
+        if (deg.where(col("deg") < k).isEmpty) (deg, true)
+        else {
+          val ok = probeSide(deg.where(col("deg") >= k).select(col("node")),
+            graft.Blocks.blockBytes(deg).getOrElse(Long.MaxValue))
+          val next = e
+            .join(ok.select(col("node").as("a")), Seq("a"), "left_semi")
+            .join(ok.select(col("node").as("b")), Seq("b"), "left_semi")
+          r.observe(next)
+          (r.cut(next), false)
+        }
     }
-    graft.Blocks.release(e)
     deg.select(col("node").as("paper_id"), col("deg").as("core_deg"))
   }
 
@@ -1219,44 +1161,33 @@ object Citations {
     *    (on dst, aliased id) matches the NEXT half-step's join key, so
     *    steady-state each half-step shuffles exactly once (the message
     *    aggregate no HITS formulation avoids). */
-  def hits(edges: DataFrame, iterations: Int = 6,
-           roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int = 6): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
     val eSrc = edges.repartition(col("src")).pinnedCut
     val eDst = eSrc.repartition(col("dst")).pinnedCut
     val nodes = eSrc.select(col("src").as("id"))
       .union(eSrc.select(col("dst").as("id"))).distinct().pinnedCut
-    // round 0: hub = 1.0 on every node (dense by definition)
-    var hub = nodes.select(col("id"), lit(1.0).as("hub"))
-    var auth: DataFrame = null
-    var lastACut: DataFrame = null
-    var lastHCut: DataFrame = null
-    for (i <- 1 to iterations) {
+    // round 0: hub = 1.0 on every node (dense by definition); no authority
+    val hub0 = nodes.select(col("id"), lit(1.0).as("hub"))
+    val (auth, hub) = Fixpoint.rounds(iterations, (null: DataFrame, hub0)) { case (r, (_, hub)) =>
       // authority half-step: araw = Σ hub over in-edges (sparse: nodes
       // without in-edges are simply absent — they are exact zeros)
       // shuffle_hash on the score side: hash-building the node-scale
       // score frame beats re-sorting the edge-scale side every half-step
       // (SMJ would sort 600k+ edges 2×/round; the hash build is O(nodes))
-      val araw = eSrc.join(hub.hint("shuffle_hash"), eSrc("src") === hub("id"))
-        .groupBy(eSrc("dst").as("id")).agg(sum(col("hub")).as("araw"))
-      val aCut = araw.localCheckpoint() // eager — materialized before release
-      roundProbe(i, araw, () => aCut.count())
-      if (lastACut != null) graft.Blocks.release(lastACut)
-      lastACut = aCut
+      val aCut = r.cut(eSrc.join(hub.hint("shuffle_hash"), eSrc("src") === hub("id"))
+        .groupBy(eSrc("dst").as("id")).agg(sum(col("hub")).as("araw")))
       val anorm = broadcast(
         aCut.agg(sqrt(sum(col("araw") * col("araw"))).as("anorm")))
-      auth = aCut.crossJoin(anorm)
+      val auth = aCut.crossJoin(anorm)
         .select(col("id"), (col("araw") / col("anorm")).as("auth"))
       // hub half-step: hraw = Σ auth over out-edges, same shape transposed
-      val hraw = eDst.join(auth.hint("shuffle_hash"), eDst("dst") === auth("id"))
-        .groupBy(eDst("src").as("id")).agg(sum(col("auth")).as("hraw"))
-      val hCut = hraw.localCheckpoint()
-      if (lastHCut != null) graft.Blocks.release(lastHCut)
-      lastHCut = hCut
+      val hCut = r.cut(eDst.join(auth.hint("shuffle_hash"), eDst("dst") === auth("id"))
+        .groupBy(eDst("src").as("id")).agg(sum(col("auth")).as("hraw")))
       val hnorm = broadcast(
         hCut.agg(sqrt(sum(col("hraw") * col("hraw"))).as("hnorm")))
-      hub = hCut.crossJoin(hnorm)
-        .select(col("id"), (col("hraw") / col("hnorm")).as("hub"))
+      (auth, hCut.crossJoin(hnorm)
+        .select(col("id"), (col("hraw") / col("hnorm")).as("hub")))
     }
     graft.Blocks.release(eSrc)
     graft.Blocks.release(eDst)
@@ -1345,8 +1276,7 @@ object Citations {
     * pinned partitioning; labels are cut once per round with superseded
     * cuts released immediately; the edge frame is released after the
     * loop (the returned frame reads only the final cut). */
-  def components(edges: DataFrame, rounds: Int = 10,
-                 roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def components(edges: DataFrame, rounds: Int = 10): DataFrame = {
     // both directions: a node hears the labels of every neighbor
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
@@ -1354,32 +1284,19 @@ object Citations {
         .select(col("dst").as("u"), col("src").as("v")))
       .repartition(col("u")).pinnedCut
     // und is partitioned on u, so the node-id distinct needs no exchange
-    var labels = und.select(col("u").as("id")).distinct()
+    val labels0 = und.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label")).pinnedCut
-    var converged = false
-    var i = 0
-    // release() is deliberately a no-op on DERIVED frames, so track the
-    // raw checkpoint (labels is its chg-pruning projection)
-    var lastCut = labels
-    while (!converged && i < rounds) {
-      i += 1
-      val msg = und.join(labels.hint("shuffle_hash"), und("u") === labels("id"))
-        .groupBy(und("v").as("id")).agg(min(col("label")).as("ml"))
-      val next = labels.join(msg, Seq("id"))
-        .select(col("id"), least(col("label"), col("ml")).as("label"),
-          (col("ml") < col("label")).as("chg"))
-      val cut = next.localCheckpoint() // eager — materialized before release
-      val changed = cut.where(col("chg")).count() // checkpoint scan, no join
-      roundProbe(i, next, () => cut.count())
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      labels = cut.select(col("id"), col("label"))
-      converged = changed == 0
+    val (labels, _) = Fixpoint.converge("components", rounds, (labels0, false))(_._2) {
+      case (r, (labels, _)) =>
+        val msg = und.join(labels.hint("shuffle_hash"), und("u") === labels("id"))
+          .groupBy(und("v").as("id")).agg(min(col("label")).as("ml"))
+        val cut = r.cut(labels.join(msg, Seq("id"))
+          .select(col("id"), least(col("label"), col("ml")).as("label"),
+            (col("ml") < col("label")).as("chg")))
+        // the chg-pruning projection; the checkpoint scan needs no join
+        (cut.select(col("id"), col("label")), cut.where(col("chg")).count() == 0)
     }
     graft.Blocks.release(und) // the returned frame reads only the final cut
-    if (!converged) throw new IllegalStateException(
-      s"components did not converge in $rounds rounds " +
-        "(graph diameter exceeds the cap); raise it")
     labels.select(col("id").as("paper_id"), col("label").as("component"))
   }
 
@@ -1459,8 +1376,7 @@ object Citations {
     * hops (h1 = frontier's neighbors, h2 = their neighbors), so the
     * traversal explores up to `2 × rounds` hops — the default of 16
     * keeps the hop budget at 32. */
-  def sccPivot(edges: DataFrame, rounds: Int = 16,
-               roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def sccPivot(edges: DataFrame, rounds: Int = 16): DataFrame = {
     val raw = edges.where(col("src") =!= col("dst"))
     // traversal parallelism: every per-round stage inherits the pinned
     // e2 side's width, so the cut's size-aware partition count (bytes /
@@ -1489,42 +1405,25 @@ object Citations {
     val seed = pivot
       .select(explode(array(concat(lit("F:"), col("id")),
         concat(lit("B:"), col("id")))).as("id")).localCheckpoint()
-    var visited = seed
-    var frontier = seed
-    var i = 0
-    var done = false
-    while (!done && i < rounds) {
-      i += 1
-      // TWO hops per round: at sf0.1 the per-round cost is flat
-      // (~1 s whether the frontier is 8 or 54k rows — pure stage
-      // overhead), so the round count, not data volume, is the bill;
-      // the double-step halves driver round-trips. h1 appears both in
-      // the union and as h2's probe, but its distinct exchange is
-      // identical in both branches (ReusedExchange) and its output
-      // partitioning (by id) feeds the h2 join without a re-exchange.
-      val h1 = e2.join(frontier.hint("shuffle_hash"), e2("k") === frontier("id"))
-        .select(col("t").as("id")).distinct()
-      val h2 = e2.join(h1.hint("shuffle_hash"), e2("k") === h1("id"))
-        .select(col("t").as("id"))
-      val nxt = h1.unionByName(h2).distinct()
-        .join(visited, Seq("id"), "left_anti")
-      val cutN = nxt.localCheckpoint()
-      val n = cutN.count()
-      roundProbe(i, nxt, () => n)
-      if (n == 0) {
-        graft.Blocks.release(cutN)
-        done = true
-      } else {
-        val grown = visited.union(cutN).localCheckpoint()
-        if (visited ne seed) graft.Blocks.release(visited)
-        if (frontier ne seed) graft.Blocks.release(frontier)
-        visited = grown
-        frontier = cutN
-      }
+    val (visited, frontier, _) = Fixpoint.converge("sccPivot", rounds, (seed, seed, false))(_._3) {
+      case (r, (visited, frontier, _)) =>
+        // TWO hops per round: at sf0.1 the per-round cost is flat
+        // (~1 s whether the frontier is 8 or 54k rows — pure stage
+        // overhead), so the round count, not data volume, is the bill;
+        // the double-step halves driver round-trips. h1 appears both in
+        // the union and as h2's probe, but its distinct exchange is
+        // identical in both branches (ReusedExchange) and its output
+        // partitioning (by id) feeds the h2 join without a re-exchange.
+        val h1 = e2.join(frontier.hint("shuffle_hash"), e2("k") === frontier("id"))
+          .select(col("t").as("id")).distinct()
+        val h2 = e2.join(h1.hint("shuffle_hash"), e2("k") === h1("id"))
+          .select(col("t").as("id"))
+        val cutN = r.cut(h1.unionByName(h2).distinct()
+          .join(visited, Seq("id"), "left_anti"))
+        // an empty frontier is the fixpoint: its cut is dropped, the state kept
+        if (cutN.count() == 0) (visited, frontier, true)
+        else (r.cut(visited.union(cutN)), cutN, false)
     }
-    if (!done) throw new IllegalStateException(
-      s"reach closure did not converge in $rounds double-hop rounds " +
-        s"(${2 * rounds} hops); raise the cap")
     val fwd = visited.where(col("id").startsWith("F:"))
       .select(substring(col("id"), 3, Int.MaxValue).as("id"))
     val bwd = visited.where(col("id").startsWith("B:"))
@@ -1534,10 +1433,7 @@ object Citations {
     val scc = fwd.join(bwd, Seq("id"), "left_semi")
       .select(col("id").as("paper_id"))
       .localCheckpoint()
-    graft.Blocks.release(e2)
-    if (visited ne seed) graft.Blocks.release(visited)
-    if (frontier ne seed) graft.Blocks.release(frontier)
-    graft.Blocks.release(seed)
+    Seq(e2, visited, frontier).foreach(graft.Blocks.release)
     scc
   }
 
@@ -1603,8 +1499,7 @@ object Citations {
     * 100 TB the trim typically removes the vast majority of nodes
     * (power-law corpora are mostly acyclic tendrils), so the expensive
     * closure runs on the small cyclic core. */
-  def sccAll(edges: DataFrame, trimRounds: Int = 10, pivotRounds: Int = 2,
-             roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def sccAll(edges: DataFrame, trimRounds: Int = 10, pivotRounds: Int = 2): DataFrame = {
     // same width rule as sccPivot: the cut sizes its own partition count
     // from real input bytes (Blocks.cutPartitions) — per-trim-round
     // stages are overhead-bound at sf0.1, edge-proportional at 100 TB
@@ -1613,61 +1508,34 @@ object Citations {
     val nodes = e0.select(col("src").as("id"))
       .unionByName(e0.select(col("dst").as("id"))).distinct()
       .localCheckpoint()
-    var probeRound = 0
-    var rem = e0
-    var edgesLeft = rem.count()
-    var sccFrames: List[DataFrame] = Nil // (paper_id, scc_id, scc_size)
-    var outer = 0
-    while (edgesLeft > 0 && outer < pivotRounds) {
-      outer += 1
-      // trim to the directed core (bounded fixpoint, kCore discipline)
-      var e = rem
-      var prev = edgesLeft
-      var conv = false
-      var t = 0
-      while (!conv && t < trimRounds) {
-        t += 1
-        val keep = e.select(col("src").as("n")).distinct()
-          .join(e.select(col("dst").as("n")).distinct(), Seq("n"), "left_semi")
-        val nxt = e
-          .join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-        val cut = nxt.localCheckpoint() // eager — materialized before release
-        val n = cut.count()
-        probeRound += 1
-        roundProbe(probeRound, nxt, () => n)
-        if ((e ne e0) && (e ne rem)) graft.Blocks.release(e)
-        e = cut
-        conv = n == prev
-        prev = n
-      }
-      if (!conv) throw new IllegalStateException(
-        s"sccAll: trim did not reach its fixpoint in $trimRounds rounds; raise the cap")
-      if (prev == 0) {
-        // the residual is acyclic — everything left is singletons
-        if (e ne e0) graft.Blocks.release(e)
-        edgesLeft = 0
-      } else {
-        val s = sccPivot(e) // checkpointed member frame (paper_id)
-        val meta = s.agg(min(col("paper_id")).as("scc_id"),
-          count(lit(1)).as("scc_size"))
-        sccFrames ::= s.crossJoin(broadcast(meta))
-        val remNxt = e
-          .join(s.select(col("paper_id").as("src")), Seq("src"), "left_anti")
-          .join(s.select(col("paper_id").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"))
-          .localCheckpoint()
-        edgesLeft = remNxt.count()
-        probeRound += 1
-        roundProbe(probeRound, remNxt, () => edgesLeft)
-        if (e ne e0) graft.Blocks.release(e)
-        if (rem ne e0) graft.Blocks.release(rem)
-        rem = remNxt
-      }
+    // (residual edges, their count, per-SCC (paper_id, scc_id, scc_size))
+    val (rem, _, sccFrames) = Fixpoint.converge("sccAll", pivotRounds,
+        (e0, e0.count(), List.empty[DataFrame]))(_._2 == 0) {
+      case (r, (rem, edgesLeft, found)) =>
+        // trim to the directed core (bounded fixpoint, kCore discipline)
+        val (e, left, _) = Fixpoint.converge("sccAll trim", trimRounds,
+            (rem, edgesLeft, false))(_._3) { case (t, (e, prev, _)) =>
+          val keep = e.select(col("src").as("n")).distinct()
+            .join(e.select(col("dst").as("n")).distinct(), Seq("n"), "left_semi")
+          val cut = t.cut(e
+            .join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
+            .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
+            .select(col("src"), col("dst")))
+          val n = cut.count()
+          (cut, n, n == prev)
+        }
+        if (left == 0) (e, 0L, found) // the residual is acyclic: singletons
+        else {
+          val s = sccPivot(e) // checkpointed member frame (paper_id)
+          val meta = s.agg(min(col("paper_id")).as("scc_id"),
+            count(lit(1)).as("scc_size"))
+          val remNxt = r.cut(e
+            .join(s.select(col("paper_id").as("src")), Seq("src"), "left_anti")
+            .join(s.select(col("paper_id").as("dst")), Seq("dst"), "left_anti")
+            .select(col("src"), col("dst")))
+          (remNxt, remNxt.count(), s.crossJoin(broadcast(meta)) :: found)
+        }
     }
-    if (edgesLeft > 0) throw new IllegalStateException(
-      s"sccAll: cycles remain after $pivotRounds pivot extractions; raise the cap")
     val members = sccFrames.map(_.select(col("paper_id")))
       .reduceOption(_ unionByName _)
     val singles = members
@@ -1676,7 +1544,7 @@ object Citations {
       .getOrElse(nodes)
       .select(col("id").as("paper_id"), col("id").as("scc_id"),
         lit(1L).as("scc_size"))
-    graft.Blocks.release(e0)
+    graft.Blocks.release(rem)
     sccFrames.foldLeft(singles)(_ unionByName _)
   }
 
@@ -1851,17 +1719,15 @@ object Citations {
     * value is the per-round sum scalar. Superseded level cuts are
     * released in-loop, so peak footprint is O(one iterate). */
   def sccLayers(edges: DataFrame, trimRounds: Int = 10, pivotRounds: Int = 2,
-                levelRounds: Int = 12,
-                roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame =
+                levelRounds: Int = 12): DataFrame =
     sccLayersFrom(edges, sccAll(edges, trimRounds, pivotRounds).localCheckpoint(),
-      levelRounds, roundProbe, releaseLabels = true)
+      levelRounds, releaseLabels = true)
 
   /** [[sccLayers]] over a PRE-COMPUTED labeling (see
     * [[sccCondensationFrom]]); `releaseLabels` stays false for cached
     * label frames — the cache owns their lifecycle, not this consumer. */
   def sccLayersFrom(edges: DataFrame, labels: DataFrame,
                     levelRounds: Int = 12,
-                    roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe,
                     releaseLabels: Boolean = false): DataFrame = {
     // same width rule as sccPivot: condensation frames are ≤ node-sized,
     // so per-round stages are overhead-bound — the cut sizes its width
@@ -1879,32 +1745,22 @@ object Citations {
     val sccs = labels.select(col("scc_id"), col("scc_size")).distinct()
       .pinnedCut
     if (releaseLabels) graft.Blocks.release(labels)
-    var levels = sccs.select(col("scc_id"), lit(0L).as("level")).localCheckpoint()
-    var prevSum = 0L
-    var done = false
-    var i = 0
-    while (!done && i < levelRounds) {
-      i += 1
+    val levels0 = sccs.select(col("scc_id"), lit(0L).as("level")).localCheckpoint()
+    // the condensation is acyclic, so the fixpoint is the DAG's max level
+    val (levels, _, _) = Fixpoint.converge("sccLayers", levelRounds,
+        (levels0, 0L, false))(_._3) { case (r, (levels, prevSum, _)) =>
       val cand = ce.join(levels.hint("shuffle_hash"),
           ce("src_scc") === levels("scc_id"))
         .select(col("dst_scc").as("scc_id"), (col("level") + 1).as("lvl"))
         .groupBy(col("scc_id")).agg(max(col("lvl")).as("lvl"))
-      val next = levels.select(col("scc_id"), col("level"))
+      val cut = r.cut(levels.select(col("scc_id"), col("level"))
         .join(cand, Seq("scc_id"), "left_outer")
         .select(col("scc_id"),
-          greatest(col("level"), coalesce(col("lvl"), lit(0L))).as("level"))
-      val cut = next.localCheckpoint()
+          greatest(col("level"), coalesce(col("lvl"), lit(0L))).as("level")))
       val s = cut.agg(coalesce(sum(col("level")), lit(0L)))
         .collect()(0).getLong(0)
-      roundProbe(i, next, () => s)
-      graft.Blocks.release(levels)
-      levels = cut
-      if (s == prevSum) done = true else prevSum = s
+      (cut, s, s == prevSum)
     }
-    if (!done) throw new IllegalStateException(
-      s"sccLayers: level propagation did not converge in $levelRounds rounds; " +
-        "raise the cap (the condensation is acyclic, so the fixpoint is the " +
-        "DAG's max level)")
     val out = sccs.join(levels, Seq("scc_id"))
       .select(col("scc_id"), col("scc_size"), col("level"))
       .localCheckpoint()
@@ -1973,18 +1829,16 @@ object Citations {
     * edge partitioning + two partial-aggregable counts ((v,label) then
     * v) — no windows, no cartesians; labels cut per round with
     * superseded cuts released ([[components]] lifecycle). */
-  def lpa(edges: DataFrame, rounds: Int = 4,
-          roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def lpa(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
       .union(edges.where(col("src") =!= col("dst"))
         .select(col("dst").as("u"), col("src").as("v")))
       .distinct()
       .repartition(col("u")).pinnedCut
-    var labels = und.select(col("u").as("id")).distinct()
+    val labels0 = und.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label")).pinnedCut
-    var lastCut = labels
-    for (i <- 1 to rounds) {
+    val labels = Fixpoint.rounds(rounds, labels0) { (r, labels) =>
       // ONE exchange feeds both aggregates: repartition on the message key
       // v, under which hashpartitioning(v) satisfies the (v,label) AND the
       // (v) clustering requirements — both groupBys run partition-local
@@ -2001,14 +1855,9 @@ object Citations {
         .agg(min(concat(
           lpad((lit(999999999999L) - col("cnt")).cast("string"), 12, "0"),
           col("label"))).as("key"))
-      val next = labels.join(msg, Seq("id"), "left_outer")
+      r.cut(labels.join(msg, Seq("id"), "left_outer")
         .select(col("id"),
-          coalesce(expr("substring(key, 13)"), col("label")).as("label"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      labels = cut
+          coalesce(expr("substring(key, 13)"), col("label")).as("label")))
     }
     graft.Blocks.release(und)
     labels.select(col("id").as("paper_id"), col("label").as("community"))
@@ -2078,71 +1927,56 @@ object Citations {
     * round, nothing quadratic, no driver loop over data — the decided
     * cuts are unioned lazily at the end, ≤rounds frames of disjoint
     * nodes). */
-  def mis(edges: DataFrame, rounds: Int = 12,
-          roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def mis(edges: DataFrame, rounds: Int = 12): DataFrame = {
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
       .union(edges.where(col("src") =!= col("dst"))
         .select(col("dst").as("u"), col("src").as("v")))
       .distinct()
-    var e = und.repartition(col("u")).pinnedCut
-    var alive = e.select(col("u").as("id")).distinct().pinnedCut
+    val e0 = und.repartition(col("u")).pinnedCut
+    val alive0 = e0.select(col("u").as("id")).distinct().pinnedCut
     // the LCG priority hashes THROUGH a BIGINT cast; a non-numeric id
     // would cast to NULL and null-poison its key, silently starving the
     // node of wins — fail loudly instead (the count scans blocks the
     // loop materialized anyway)
-    val nonNumeric = alive.where(col("id").cast("long").isNull).count()
+    val nonNumeric = alive0.where(col("id").cast("long").isNull).count()
     require(nonNumeric == 0,
       s"mis requires numeric node ids ($nonNumeric non-numeric); " +
         "the per-round LCG priority casts ids to BIGINT")
-    var lastE = e
-    var lastAlive = alive
-    val decidedCuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var remaining = alive.count()
-    var i = 0
-    while (remaining > 0 && i < rounds) {
-      i += 1
-      val keyed = alive.select(col("id"), concat(
-        lpad(((pmod(col("id").cast("long"), lit(99991L)) * lit(40503L)
-          + lit(i * 7919L)) % lit(99991L)).cast("string"), 6, "0"),
-        col("id")).as("k"))
-      // min undecided-neighbor key per node: e is maintained alive-only,
-      // so the join needs no residual filter
-      val minNb = e.join(keyed.hint("shuffle_hash"), e("u") === keyed("id"))
-        .groupBy(e("v").as("id")).agg(min(col("k")).as("mk"))
-      val winners = keyed.join(minNb, Seq("id"), "left_outer")
-        .where(col("mk").isNull || col("k") < col("mk"))
-        .select(col("id"))
-      // winners' neighborhoods leave the graph on the losing side
-      val out = e.join(winners.select(col("id").as("u")), Seq("u"), "left_semi")
-        .select(col("v").as("id")).distinct()
-      val cut = winners
-        .select(col("id"), lit(true).as("in_mis"), lit(i).as("round"))
-        .unionAll(out.select(col("id"), lit(false).as("in_mis"),
-          lit(i).as("round")))
-        .localCheckpoint()
-      decidedCuts += cut
-      val gone = cut.select(col("id"))
-      val nextAlive = alive.join(gone, Seq("id"), "left_anti")
-      val nextE = e
-        .join(gone.select(col("id").as("u")), Seq("u"), "left_anti")
-        .join(gone.select(col("id").as("v")), Seq("v"), "left_anti")
-        .select(col("u"), col("v"))
-      val aliveCut = nextAlive.localCheckpoint()
-      val eCut = nextE.localCheckpoint()
-      remaining = aliveCut.count()
-      roundProbe(i, winners, () => cut.count())
-      graft.Blocks.release(lastAlive)
-      graft.Blocks.release(lastE)
-      lastAlive = aliveCut
-      lastE = eCut
-      alive = aliveCut
-      e = eCut
+    // (alive nodes, alive-only edges, alive count, each round's decided cut)
+    val (alive, e, _, decidedCuts) = Fixpoint.converge("mis", rounds,
+        (alive0, e0, alive0.count(), Vector.empty[DataFrame]))(_._3 == 0) {
+      case (r, (alive, e, _, decided)) =>
+        val i = r.i
+        val keyed = alive.select(col("id"), concat(
+          lpad(((pmod(col("id").cast("long"), lit(99991L)) * lit(40503L)
+            + lit(i * 7919L)) % lit(99991L)).cast("string"), 6, "0"),
+          col("id")).as("k"))
+        // min undecided-neighbor key per node: e is maintained alive-only,
+        // so the join needs no residual filter
+        val minNb = e.join(keyed.hint("shuffle_hash"), e("u") === keyed("id"))
+          .groupBy(e("v").as("id")).agg(min(col("k")).as("mk"))
+        val winners = keyed.join(minNb, Seq("id"), "left_outer")
+          .where(col("mk").isNull || col("k") < col("mk"))
+          .select(col("id"))
+        // winners' neighborhoods leave the graph on the losing side
+        val out = e.join(winners.select(col("id").as("u")), Seq("u"), "left_semi")
+          .select(col("v").as("id")).distinct()
+        r.observe(winners)
+        val cut = r.cut(winners
+          .select(col("id"), lit(true).as("in_mis"), lit(i).as("round"))
+          .unionAll(out.select(col("id"), lit(false).as("in_mis"),
+            lit(i).as("round"))))
+        val gone = cut.select(col("id"))
+        val aliveCut = r.cut(alive.join(gone, Seq("id"), "left_anti"))
+        val eCut = r.cut(e
+          .join(gone.select(col("id").as("u")), Seq("u"), "left_anti")
+          .join(gone.select(col("id").as("v")), Seq("v"), "left_anti")
+          .select(col("u"), col("v")))
+        (aliveCut, eCut, aliveCut.count(), decided :+ cut)
     }
-    graft.Blocks.release(lastAlive)
-    graft.Blocks.release(lastE)
-    if (remaining > 0) throw new IllegalStateException(
-      s"mis did not decide every node in $rounds rounds; raise the cap")
+    graft.Blocks.release(alive)
+    graft.Blocks.release(e)
     if (decidedCuts.isEmpty) // empty graph: zero decisions, schema intact
       und.select(col("u").as("paper_id"), lit(true).as("in_mis"),
         lit(0).as("round")).limit(0)
@@ -2386,9 +2220,8 @@ object Citations {
     * aggregable (id,c) counts) plus two bounded side frames — Σtot is
     * ≤|communities| rows and deg is the pinned ≤|V| frame — joined on
     * the candidate key; labels cut per round, superseded cuts released. */
-  def louvain(edges: DataFrame, rounds: Int = 4,
-              roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
-    val (labels, und, deg) = louvainCore(edges, rounds, roundProbe)
+  def louvain(edges: DataFrame, rounds: Int = 4): DataFrame = {
+    val (labels, und, deg) = louvainCore(edges, rounds)
     graft.Blocks.release(und)
     graft.Blocks.release(deg)
     labels.select(col("id").as("paper_id"), col("label").as("community"))
@@ -2397,8 +2230,7 @@ object Citations {
   /** Shared core: returns (labels, und, deg) with `und`/`deg` still
     * pinned — [[louvain]] releases them; [[louvainStats]] consumes them
     * first. `labels` is an eager localCheckpoint, safe past release. */
-  private def louvainCore(edges: DataFrame, rounds: Int,
-                          roundProbe: (Int, DataFrame, () => Long) => Unit)
+  private def louvainCore(edges: DataFrame, rounds: Int)
   : (DataFrame, DataFrame, DataFrame) = {
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
@@ -2412,9 +2244,8 @@ object Citations {
     val offset = lit(new java.math.BigDecimal("1000000000000000000000000"))
       .cast("decimal(38,0)") // 10^24 > any |score| this side of yottascale
     val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    var labels = deg.select(col("id"), col("id").as("label")).pinnedCut
-    var lastCut = labels
-    for (i <- 1 to rounds) {
+    val labels0 = deg.select(col("id"), col("id").as("label")).pinnedCut
+    val labels = Fixpoint.rounds(rounds, labels0) { (r, labels) =>
       val sigma = labels.join(deg, Seq("id"))
         .groupBy(col("label").as("c")).agg(sum(col("deg")).as("tot"))
       // the lpa exchange: one repartition on the message key feeds the
@@ -2437,13 +2268,8 @@ object Citations {
           dec38(lit(wTot)) * dec38(col("k")) - dec38(col("deg")) * dec38(col("totx")))
         .withColumn("key",
           concat(lpad((offset - col("score")).cast("string"), 25, "0"), col("c")))
-      val next = scored.groupBy(col("id")).agg(min(col("key")).as("key"))
-        .select(col("id"), expr("substring(key, 26)").as("label"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      labels = cut
+      r.cut(scored.groupBy(col("id")).agg(min(col("key")).as("key"))
+        .select(col("id"), expr("substring(key, 26)").as("label")))
     }
     (labels, und, deg)
   }
@@ -2591,11 +2417,10 @@ object Citations {
         .collect()(0).getDecimal(0)
       BigInt(wTot) * BigInt(internal) - BigInt(totSq.toBigInteger)
     }
-    var l2 = degW.select(col("id"), col("id").as("label")).pinnedCut
-    var curScore = scoreOf(l2)
-    var lastCut = l2
-    var stalled = false
-    for (_ <- 1 to rounds2 if !stalled) {
+    val l20 = degW.select(col("id"), col("id").as("label")).pinnedCut
+    // (accepted labels, their score, stalled)
+    val (l2, _, _) = Fixpoint.rounds(rounds2, (l20, scoreOf(l20), false),
+        until = (s: (DataFrame, BigInt, Boolean)) => s._3) { case (r, (l2, curScore, _)) =>
       val sigma = l2.join(degW, Seq("id"))
         .groupBy(col("label").as("c")).agg(sum(col("deg")).as("tot"))
       val cand = cw.join(l2.hint("shuffle_hash"), cw("u") === l2("id"))
@@ -2623,22 +2448,14 @@ object Citations {
           dec38(lit(wTot)) * dec38(col("k")) - dec38(col("deg")) * dec38(col("totx")))
         .withColumn("key",
           concat(lpad((offset - col("score")).cast("string"), 25, "0"), col("c")))
-      val next = scored.groupBy(col("id")).agg(min(col("key")).as("key"))
-        .select(col("id"), expr("substring(key, 26)").as("label"))
-      val cut = next.localCheckpoint()
+      val cut = r.cut(scored.groupBy(col("id")).agg(min(col("key")).as("key"))
+        .select(col("id"), expr("substring(key, 26)").as("label")))
       val candScore = scoreOf(cut)
-      if (candScore > curScore) {
-        graft.Blocks.release(lastCut)
-        lastCut = cut
-        l2 = cut
-        curScore = candScore
-      } else {
-        // deterministic sweep: the same candidate would be recomputed
-        // and rejected by every remaining round — stop (the twin's
-        // remaining unrolled rounds are no-ops by the same rule)
-        graft.Blocks.release(cut)
-        stalled = true
-      }
+      // a rejected candidate stalls the deterministic sweep: every later
+      // round would recompute and reject it too (the twin's remaining
+      // unrolled rounds are no-ops by the same rule)
+      if (candScore > curScore) (cut, candScore, false)
+      else (l2, curScore, true)
     }
     val out = labels
       .join(l2.select(col("id").as("l1"), col("label").as("community")),
@@ -2737,7 +2554,7 @@ object Citations {
     * Bounded output (≤|communities| rows); the stats frame is
     * checkpointed before the pinned inputs release. */
   def louvainStats(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val (labels, und, deg) = louvainCore(edges, rounds, noProbe)
+    val (labels, und, deg) = louvainCore(edges, rounds)
     val out = louvainStatsShape(labels, und, deg).localCheckpoint()
     graft.Blocks.release(und)
     graft.Blocks.release(deg)
@@ -2853,30 +2670,37 @@ object Citations {
       .distinct().localCheckpoint()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    var state = nodes.select(col("id").as("start"),
+    val state0 = nodes.select(col("id").as("start"),
         explode(expr(s"sequence(0, ${walks - 1})")).as("wid"))
       .withColumn("cur", col("start"))
       .localCheckpoint()
-    val visited = scala.collection.mutable.ArrayBuffer(
-      state.select(col("start"), col("wid"), lit(0).as("step"),
-        col("cur").as("node")))
-    val cuts = scala.collection.mutable.ArrayBuffer(state)
-    for (t <- 1 to steps) {
+    // every step's walker frame stays in the state: the paths union them all
+    val states = Fixpoint.rounds(steps, Vector(state0)) { (r, states) =>
+      val state = states.last
       val want = (pmod(col("wid").cast("long") * lit(1000003L)
-        + lit(t.toLong * 7919L)
+        + lit(r.i.toLong * 7919L)
         + col("cur").cast("long") * lit(31L), col("ddeg")) + 1L).as("want")
       val withIdx = state.join(degs, state("cur") === degs("dsrc"))
         .select(col("start"), col("wid"), col("cur"), want)
-      state = withIdx
+      states :+ r.cut(withIdx
         .join(nb.hint("shuffle_hash"),
           withIdx("cur") === nb("src") && withIdx("want") === nb("rank"))
-        .select(col("start"), col("wid"), nb("dst").as("cur"))
-        .localCheckpoint()
-      cuts += state
-      visited += state.select(col("start"), col("wid"), lit(t).as("step"),
-        col("cur").as("node"))
+        .select(col("start"), col("wid"), nb("dst").as("cur")))
     }
-    val out = visited.reduce(_ unionByName _)
+    val out = walkPaths(states)
+    states.foreach(graft.Blocks.release)
+    graft.Blocks.release(nb)
+    graft.Blocks.release(degs)
+    out
+  }
+
+  /** One path string per (start, walk) over the walker frames of steps
+    * 0, 1, …, checkpointed so the caller can release the frames. */
+  private def walkPaths(states: Seq[DataFrame]): DataFrame =
+    states.zipWithIndex
+      .map { case (s, t) =>
+        s.select(col("start"), col("wid"), lit(t).as("step"), col("cur").as("node")) }
+      .reduce(_ unionByName _)
       .groupBy(col("start"), col("wid"))
       .agg(max(col("step")).as("n_steps"),
         array_join(expr("transform(sort_array(collect_list(struct(step, node)))," +
@@ -2884,11 +2708,6 @@ object Citations {
       .select(col("start").as("paper_id"), col("wid").as("walk_id"),
         col("n_steps"), col("path"))
       .localCheckpoint()
-    cuts.foreach(graft.Blocks.release)
-    graft.Blocks.release(nb)
-    graft.Blocks.release(degs)
-    out
-  }
 
   /** DuckDB twin of [[randomWalks]] — unrolled hops, same integer mix. */
   def randomWalksSql(walks: Int = 2, steps: Int = 4): String = {
@@ -2974,27 +2793,23 @@ object Citations {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     // step 1: uniform (no prev) — the randomWalks rule
-    var state = nodes.select(col("id").as("start"),
+    val state0 = nodes.select(col("id").as("start"),
         explode(expr(s"sequence(0, ${walks - 1})")).as("wid"))
       .withColumn("cur", col("start"))
       .localCheckpoint()
-    val visited = scala.collection.mutable.ArrayBuffer(
-      state.select(col("start"), col("wid"), lit(0).as("step"),
-        col("cur").as("node")))
-    val cuts = scala.collection.mutable.ArrayBuffer(state)
     val want1 = (pmod(col("wid").cast("long") * lit(1000003L) + lit(7919L)
       + col("cur").cast("long") * lit(31L), col("ddeg")) + 1L).as("want")
-    val s1 = state.join(degs, state("cur") === degs("dsrc"))
+    val s1 = state0.join(degs, state0("cur") === degs("dsrc"))
       .select(col("start"), col("wid"), col("cur"), want1)
-    state = s1.join(ranked.hint("shuffle_hash"),
+    val state1 = s1.join(ranked.hint("shuffle_hash"),
         s1("cur") === ranked("src") && s1("want") === ranked("rank"))
       .select(col("start"), col("wid"), s1("cur").as("prev"),
         ranked("dst").as("cur"))
       .localCheckpoint()
-    cuts += state
-    visited += state.select(col("start"), col("wid"), lit(1).as("step"),
-      col("cur").as("node"))
-    for (t <- 2 to steps) {
+    // rounds are steps 2..steps; every walker frame stays in the state
+    val states = Fixpoint.rounds(steps - 1, Vector(state0, state1)) { (r, states) =>
+      val t = r.i + 1
+      val state = states.last
       val cands = state.join(nb.hint("shuffle_hash"), state("cur") === nb("src"))
         .select(col("start"), col("wid"), col("prev"), col("cur"),
           nb("dst").as("nxt"))
@@ -3011,24 +2826,13 @@ object Citations {
         .withColumn("r", pmod(col("wid").cast("long") * lit(1000003L)
           + lit(t.toLong * 7919L) + col("cur").cast("long") * lit(31L),
           col("tot")))
-      state = cum
+      states :+ r.cut(cum
         .where(col("r") >= col("cum") - col("wt") && col("r") < col("cum"))
         .select(col("start"), col("wid"), col("cur").as("prev"),
-          col("nxt").as("cur"))
-        .localCheckpoint()
-      cuts += state
-      visited += state.select(col("start"), col("wid"), lit(t).as("step"),
-        col("cur").as("node"))
+          col("nxt").as("cur")))
     }
-    val out = visited.reduce(_ unionByName _)
-      .groupBy(col("start"), col("wid"))
-      .agg(max(col("step")).as("n_steps"),
-        array_join(expr("transform(sort_array(collect_list(struct(step, node)))," +
-          " x -> x.node)"), "->").as("path"))
-      .select(col("start").as("paper_id"), col("wid").as("walk_id"),
-        col("n_steps"), col("path"))
-      .localCheckpoint()
-    cuts.foreach(graft.Blocks.release)
+    val out = walkPaths(states)
+    states.foreach(graft.Blocks.release)
     Seq(nb, adj, degs, ranked).foreach(graft.Blocks.release)
     out
   }
@@ -3154,11 +2958,10 @@ object Citations {
     * the same multiplicity. Depth capped at 4 (the reach convention);
     * everything is exact integer arithmetic, so the query hash-oracles
     * with the identically-unrolled twin. */
-  def bfsPaths(edges: DataFrame, hops: Int = 4,
-               roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def bfsPaths(edges: DataFrame, hops: Int = 4): DataFrame = {
     val e = edges.where(col("src") =!= col("dst")).distinct()
       .repartition(col("src")).pinnedCut
-    val out = bfsPathsFrom(e, hops, roundProbe)
+    val out = bfsPathsFrom(e, hops)
     graft.Blocks.release(e)
     out
   }
@@ -3247,27 +3050,20 @@ object Citations {
   /** [[bfsPaths]] over an ALREADY-prepared (deduped, pinned) edge frame —
     * lets [[betweenness]] share one edge checkpoint with its backward
     * pass instead of preparing it twice. */
-  private def bfsPathsFrom(e: DataFrame, hops: Int,
-                           roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  private def bfsPathsFrom(e: DataFrame, hops: Int): DataFrame = {
     val seed = counts(e).orderBy(col("citations").desc, col("paper_id").asc)
       .limit(1).select(col("paper_id").as("id"),
         lit(0).as("dist"), lit(new java.math.BigDecimal(1))
           .cast("decimal(38,0)").as("sigma"))
-    var reached = seed.localCheckpoint()
-    var frontier = reached
-    for (i <- 1 to hops) {
-      val next = e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
-        .groupBy(e("dst").as("id"))
-        .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
-        .join(reached.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), lit(i).as("dist"), col("sigma"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      val newReached = reached.unionByName(cut).localCheckpoint()
-      graft.Blocks.release(reached)
-      if (i > 1) graft.Blocks.release(frontier)
-      reached = newReached
-      frontier = cut
+    val seedCut = seed.localCheckpoint()
+    val (reached, _) = Fixpoint.rounds(hops, (seedCut, seedCut)) {
+      case (r, (reached, frontier)) =>
+        val cut = r.cut(e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
+          .groupBy(e("dst").as("id"))
+          .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
+          .join(reached.select(col("id")), Seq("id"), "left_anti")
+          .select(col("id"), lit(r.i).as("dist"), col("sigma")))
+        (r.cut(reached.unionByName(cut)), cut)
     }
     // σ accumulated in DECIMAL(38,0) precisely because path counts grow
     // multiplicatively; the BIGINT output boundary (decimal stringifies
@@ -3328,30 +3124,23 @@ object Citations {
     * float math is the final ≤ nSeeds-row projection (sequential
     * double adds on the 6-dp grid), so the twin hash-matches without
     * decimal accumulation. */
-  def closeness(edges: DataFrame, hops: Int = 4, nSeeds: Int = 8,
-                roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def closeness(edges: DataFrame, hops: Int = 4, nSeeds: Int = 8): DataFrame = {
     val e = edges.where(col("src") =!= col("dst")).distinct()
       .repartition(col("src")).pinnedCut
     val seeds = counts(e)
       .orderBy(col("citations").desc, col("paper_id").asc).limit(nSeeds)
       .select(col("paper_id").as("seed"))
-    var reached = seeds
+    val seedCut = seeds
       .select(col("seed"), col("seed").as("id"), lit(0).as("dist"))
       .localCheckpoint()
-    var frontier = reached
-    for (i <- 1 to hops) {
-      val next = e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
-        .select(col("seed"), e("dst").as("id")).distinct()
-        .join(reached.select(col("seed"), col("id")),
-          Seq("seed", "id"), "left_anti")
-        .select(col("seed"), col("id"), lit(i).as("dist"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      val newReached = reached.unionByName(cut).localCheckpoint()
-      graft.Blocks.release(reached)
-      if (i > 1) graft.Blocks.release(frontier)
-      reached = newReached
-      frontier = cut
+    val (reached, _) = Fixpoint.rounds(hops, (seedCut, seedCut)) {
+      case (r, (reached, frontier)) =>
+        val cut = r.cut(e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
+          .select(col("seed"), e("dst").as("id")).distinct()
+          .join(reached.select(col("seed"), col("id")),
+            Seq("seed", "id"), "left_anti")
+          .select(col("seed"), col("id"), lit(r.i).as("dist")))
+        (r.cut(reached.unionByName(cut)), cut)
     }
     val ns = (1 to hops).map(d =>
       sum(when(col("dist") === d, 1L).otherwise(0L)).as(s"n$d"))

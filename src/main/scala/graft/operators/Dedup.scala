@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixpoint, Tables}
 
 /** Deduplication over `documents(doc_id, text, lang, source, n_chars)` —
   * the LLM-data-pipeline dedup family: exact, MinHash-LSH near-dup (word
@@ -456,40 +456,29 @@ object Dedup {
     // is a singleton by definition and must not ride through the loop —
     // at corpus scale the pair graph is orders of magnitude smaller than
     // the corpus, so each round shuffles near-dup members, not 100 TB.
-    var labels = und.select(col("src").as("id")).distinct()
+    val labels0 = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
       .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val msgs = und.join(labels, und("src") === labels("id"))
-        .select(col("dst").as("id"), col("label"))
-      val folded = labels.select(col("id"), col("label")).union(msgs)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-      // shortcut hop: labels are themselves node ids, so one self-join
-      // compresses label -> label(label); halves the remaining distance
-      // to the component minimum every round
-      val byId = folded.select(col("id").as("lid"), col("label").as("l2"))
-      val next = folded.join(byId, folded("label") === col("lid"), "left_outer")
-        .select(folded("id"),
-          least(folded("label"), coalesce(col("l2"), folded("label"))).as("label"))
-        .localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("label", "old"), Seq("id"))
-        .where(col("label") =!= col("old")).count()
-      // `changed` was the last reader of the previous round's labels —
-      // release them so the loop pins O(one label frame), not O(rounds)
-      graft.Blocks.release(labels)
-      labels = next
-      converged = changed == 0
-      rounds += 1
+    // a cap hit means the component diameter exceeds 2^rounds
+    val (labels, _) = Fixpoint.converge("dedupClusters", maxRounds, (labels0, false))(_._2) {
+      case (r, (labels, _)) =>
+        val msgs = und.join(labels, und("src") === labels("id"))
+          .select(col("dst").as("id"), col("label"))
+        val folded = labels.select(col("id"), col("label")).union(msgs)
+          .groupBy(col("id")).agg(min(col("label")).as("label"))
+        // shortcut hop: labels are themselves node ids, so one self-join
+        // compresses label -> label(label); halves the remaining distance
+        // to the component minimum every round
+        val byId = folded.select(col("id").as("lid"), col("label").as("l2"))
+        val next = r.cut(folded.join(byId, folded("label") === col("lid"), "left_outer")
+          .select(folded("id"),
+            least(folded("label"), coalesce(col("l2"), folded("label"))).as("label")))
+        (next, next.join(labels.withColumnRenamed("label", "old"), Seq("id"))
+          .where(col("label") =!= col("old")).count() == 0)
     }
     // the loop's working set (pair frame) is dead once labels converged;
     // `labels` itself stays — the returned join below still reads it
     graft.Blocks.release(pairs)
-    if (!converged)
-      throw new IllegalStateException(
-        s"dedupClusters did not converge in $maxRounds rounds — component " +
-          "diameter exceeds 2^rounds; raise maxRounds")
     // singletons join their identity label back in one outer pass
     Tables.load(s, d, "documents")
       .select(col("doc_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixpoint, Tables}
 
 /** Similarity search over `embeddings(vec_id, embedding: array<float>,
   * label)` — the LLM-pipeline ANN slice.
@@ -186,10 +186,8 @@ object Similarity {
     * cluster layouts. Clusters that lose all members keep their previous
     * centroid. Same join+aggregate round shape as Citations.pageRank —
     * per-round cost is one corpus scan plus a (C × dim)-row aggregate. */
-  private def trainCentroids(e: DataFrame, c: Int, iters: Int = 3): DataFrame = {
-    var cs = seedCentroids(e, c).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val prev = cs
+  private def trainCentroids(e: DataFrame, c: Int, iters: Int = 3): DataFrame =
+    Fixpoint.rounds(iters, seedCentroids(e, c).localCheckpoint()) { (r, cs) =>
       val assigned = assignClusters(e, cs, take = 1, idCol = "vec_id")
       val means = assigned
         .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -198,16 +196,10 @@ object Similarity {
         .groupBy(col("cid"))
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("cid"), expr("transform(pm, x -> CAST(x.m AS FLOAT))").as("mean"))
-      cs = cs.select(col("cid"), col("ce").as("prev"))
+      r.cut(cs.select(col("cid"), col("ce").as("prev"))
         .join(means, Seq("cid"), "left_outer")
-        .select(col("cid"), coalesce(col("mean"), col("prev")).as("ce"))
-        .localCheckpoint()
-      // the new cut is materialized (eager) — the superseded round's
-      // blocks are dead; release keeps the loop at O(one C-row frame)
-      graft.Blocks.release(prev)
+        .select(col("cid"), coalesce(col("mean"), col("prev")).as("ce")))
     }
-    cs
-  }
 
   /** The trained coarse quantizer is a MODEL ARTIFACT — O(C × dim) floats,
     * independent of corpus size — so it is trained once per dataset and
@@ -507,11 +499,10 @@ object Similarity {
     * quantizer. Seeds: the subvectors of the first K corpus vectors. */
   private def trainCodebooks(e: DataFrame, iters: Int = 2): DataFrame = {
     val subs = subvectors(e, "vec_id").localCheckpoint()
-    var books = subs.where(col("vec_id") < PqK)
+    val books0 = subs.where(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").cast("int").as("code"), col("sub").as("ce"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val prev = books
+    val books = Fixpoint.rounds(iters, books0) { (r, books) =>
       val assigned = subs.join(broadcast(books), Seq("m"))
         .select(col("vec_id"), col("m"), col("sub"), col("code"),
           expr(l2Expr("sub", "ce")).as("d2"))
@@ -527,12 +518,10 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
         .select(col("m"), col("code"),
           expr("transform(pm, x -> CAST(x.mv AS FLOAT))").as("mean"))
-      books = books.select(col("m"), col("code"), col("ce").as("prev"))
+      r.cut(books.select(col("m"), col("code"), col("ce").as("prev"))
         .join(means, Seq("m", "code"), "left_outer")
         .select(col("m"), col("code"),
-          coalesce(col("mean"), col("prev")).as("ce"))
-        .localCheckpoint()
-      graft.Blocks.release(prev) // superseded round, new cut already live
+          coalesce(col("mean"), col("prev")).as("ce")))
     }
     // books is lineage-free after its last cut; the exploded subvector
     // frame (corpus-sized × M) is the loop's big pin — drop it now

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixpoint, Tables}
 
 /** Text-analysis operators over `documents` — the LLM-pipeline text slice:
   * corpus stats, token frequency, per-document quality scoring, marker-word
@@ -301,20 +301,20 @@ object TextAnalysis {
     * convention — the merge literal must fold into the next round's
     * projection) → a pure per-row replace. Checkpoint-per-round with
     * immediate release, the iterative-operator lifecycle. */
-  private[graft] def bpeMergeList(words: DataFrame, rounds: Int,
-                                  roundProbe: (Int, DataFrame, () => Long) => Unit = (_, _, _) => ())
+  private[graft] def bpeMergeList(words: DataFrame, rounds: Int)
       : Seq[(Int, String, String, Long)] = {
     val spark = words.sparkSession
     import spark.implicits._
-    var vocab = words
+    val vocab0 = words
       .select(expr(
         """array_join(transform(sequence(1, length(w)), i ->
           |  concat('{', substring(w, i, 1), '}')), '')""".stripMargin).as("rep"),
         col("freq"))
       .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var done = false
-    for (r <- 1 to rounds if !done) {
+    type Merges = Vector[(Int, String, String, Long)]
+    // (vocabulary, merges so far, no pair left)
+    val (vocab, merges, _) = Fixpoint.rounds(rounds, (vocab0, Vector.empty: Merges, false),
+        until = (s: (DataFrame, Merges, Boolean)) => s._3) { case (r, (vocab, merges, _)) =>
       val bestFrame = vocab
         .select(col("freq"), expr(
           """transform(filter(split(rep, '\\}'), x -> x != ''),
@@ -328,26 +328,21 @@ object TextAnalysis {
         .agg(sum(col("freq")).as("wt"))
         .orderBy(col("wt").desc, col("a"), col("b"))
         .limit(1)
-      roundProbe(r, bestFrame, () => 1L) // the argmax frame is ≤1 row by construction
+      r.observe(bestFrame)
       val best = bestFrame.as[(String, String, Long)].collect()
-      if (best.isEmpty) done = true
+      if (best.isEmpty) (vocab, merges, true)
       else {
         val (a, b, wt) = best.head
         // the {sym} anchoring (and the embedded replace literal) requires
         // delimiter-free, quote-free symbols; corpus tokens are plain words
         require(!(a + b).exists(c => c == '{' || c == '}' || c == '\''),
           s"corpus token contains a delimiter/quote: '$a' '$b'")
-        merges += ((r, a, b, wt))
-        val next = vocab
-          .select(expr(s"replace(rep, '{$a}{$b}', '{$a$b}')").as("rep"),
-            col("freq"))
-          .localCheckpoint()
-        graft.Blocks.release(vocab)
-        vocab = next
+        (r.cut(vocab.select(expr(s"replace(rep, '{$a}{$b}', '{$a$b}')").as("rep"),
+          col("freq"))), merges :+ ((r.i, a, b, wt)), false)
       }
     }
     graft.Blocks.release(vocab)
-    merges.toSeq
+    merges
   }
 
   private[graft] def bpeMergesFrom(words: DataFrame, rounds: Int): DataFrame = {
@@ -943,13 +938,12 @@ object TextAnalysis {
         expr("(CAST(3 AS DECIMAL(38,0)) * 1000000000000) div (20 * n)")
           .as("base"))
       .localCheckpoint()
-    var ranks = nodes
+    val ranks0 = nodes
       .join(broadcast(nn), Seq("lang"))
       .select(col("lang"), col("tok"), col("wdeg"),
         expr("CAST(1000000000000 AS DECIMAL(38,0)) div n").as("pr"))
       .localCheckpoint()
-    var lastCut = ranks
-    for (i <- 1 to iterations) {
+    val ranks = Fixpoint.rounds(iterations, ranks0, every = 3) { (r, ranks) =>
       val inbox = edCut
         .join(ranks.select(col("lang"), col("tok").as("src"),
             col("wdeg").as("src_wdeg"), col("pr")).hint("shuffle_hash"),
@@ -958,17 +952,11 @@ object TextAnalysis {
           expr("(CAST(17 AS DECIMAL(38,0)) * w * pr) div " +
             "(CAST(20 AS DECIMAL(38,0)) * src_wdeg)").as("term"))
         .groupBy(col("lang"), col("dst")).agg(sum(col("term")).as("inflow"))
-      val next = nodes
+      r.cut(nodes
         .join(inbox, nodes("lang") === inbox("lang") &&
           nodes("tok") === inbox("dst"), "left_outer")
         .select(nodes("lang"), nodes("tok"), nodes("wdeg"),
-          (nodes("base") + coalesce(col("inflow"), lit(0L))).as("pr"))
-      ranks = if (i % 3 == 0 || i == iterations) {
-        val cut = next.localCheckpoint() // eager: materialized pre-release
-        graft.Blocks.release(lastCut)
-        lastCut = cut
-        cut
-      } else next
+          (nodes("base") + coalesce(col("inflow"), lit(0L))).as("pr")))
     }
     graft.Blocks.release(pairs)
     graft.Blocks.release(nodes)
@@ -2033,7 +2021,8 @@ object TextAnalysis {
     // PIN the two shared aggregates: the HOF lambda in the bigram explode
     // defeats plan canonicalization, so without the checkpoints Catalyst
     // re-derives dbk/big for every consumer — FIVE corpus scans and three
-    // identical (doc_id, bg) aggregations (measured in PlanDump). One
+    // identical (doc_id, bg) aggregations (measured from the plan text,
+    // PLANS.md "quality_kneser_ney scan dedup"). One
     // materialization each replaces them: dbk feeds big + the final join,
     // big feeds pre/cont/types/logp. At 100 TB the dbk blocks are
     // corpus-scale — the same cost class as the groupBy shuffle they

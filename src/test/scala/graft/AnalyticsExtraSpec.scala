@@ -234,9 +234,10 @@ class AnalyticsExtraSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  // Partition-width invariance for the triangle/peel family: cut widths,
-  // AQE coalescing and broadcast choices move plan shape, never results —
-  // every column of every row must match at shuffle.partitions 1, 4, 8.
+  // Partition-width invariance for the triangle/peel family and the
+  // exact-valued fixpoint loops: cut widths, AQE coalescing and broadcast
+  // choices move plan shape, never results — every column of every row
+  // must match at shuffle.partitions 1, 4, 8.
   private def rowsAtWidth(query: String, width: Int): Seq[String] = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
@@ -249,7 +250,9 @@ class AnalyticsExtraSpec extends AnyFunSuite {
   }
 
   for (q <- Seq("citation_triangles", "citation_local_clustering",
-                "citation_ktruss", "citation_kcore"))
+                "citation_ktruss", "citation_kcore", "citation_components",
+                "citation_lpa", "citation_mis", "citation_scc",
+                "citation_bfs_paths"))
     test(s"$q: identical rows at shuffle.partitions 1/4/8") {
       val base = rowsAtWidth(q, 1)
       assert(base.nonEmpty, s"$q returned no rows at sf0.001")

@@ -10,11 +10,11 @@ import graft.operators.Citations
   * with a `LogicalRDD`, so the blanket audit sees only the final
   * projection over an opaque RDD scan, never the join/aggregate shape a
   * round actually executes (PLANS.md concedes this for every fixpoint).
-  * The operators expose a `roundProbe` hook that fires on each round's
-  * un-cut `next` frame before the checkpoint; this spec injects a probe,
-  * captures the executed plan of ROUND 1 (whose inputs are all
-  * checkpointed scans, so the plan contains exactly one round's
-  * operators), and pins the shape:
+  * Every round runs through [[Fixpoint]], whose observer sees each
+  * round's un-cut frame before the checkpoint replaces it; this spec
+  * installs an observer with `Fixpoint.observing`, captures the executed
+  * plan of ROUND 1 (whose inputs are all checkpointed scans, so the plan
+  * contains exactly one round's operators), and pins the shape:
   *
   *  - no CartesianProduct, no UDFs — the same scale-killers the blanket
   *    audit bans;
@@ -31,17 +31,17 @@ class IterativePlanSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
-  private def capture(run: ((Int, DataFrame, () => Long) => Unit) => DataFrame): Map[Int, String] = {
+  private def capture(run: => DataFrame): Map[Int, String] = {
     val plans = scala.collection.mutable.Map[Int, String]()
     // sparkPlan is the STATIC physical plan — stable whether or not the
     // operator's own checkpoint has already executed the round (the
-    // probe now fires post-cut; executedPlan would print final+initial
+    // observer fires post-cut; executedPlan would print final+initial
     // AQE sections and double-count every join). Rounds 1 and 2 are
     // captured — round 1's inputs are the initial checkpointed scans,
-    // round 2's carry the previous round's scalar folds. The count thunk
-    // is never invoked: plan capture must stay job-free.
-    run((i, df, _) =>
-      if (i <= 2) plans(i) = df.queryExecution.sparkPlan.toString)
+    // round 2's carry the previous round's scalar folds. Plan capture
+    // stays job-free.
+    Fixpoint.observing((i, df) =>
+      if (i <= 2) plans(i) = df.queryExecution.sparkPlan.toString)(run)
     plans.toMap
   }
 
@@ -58,7 +58,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("pageRank round: 2 equi-joins + 1 dangling-mass fold, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.pageRank(e, iterations = 2, roundProbe = p))
+    val plans = capture(Citations.pageRank(e, iterations = 2))
     val plan = plans(1)
     auditCommon("pageRank", plan)
     // contribs (edges ⋈ ranks) + carrier re-instatement (nodesWithDeg
@@ -69,7 +69,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("kCore round: 1 degree aggregate + 2 semi-joins, no scalar folds") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.kCore(e, roundProbe = p))
+    val plans = capture(Citations.kCore(e))
     val plan = plans(1)
     auditCommon("kCore", plan)
     assert(equiJoins(plan) === 2, s"kCore round joins changed:\n$plan")
@@ -79,7 +79,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("hits half-step: ONE message join + aggregate, norm fold only — sparse shape") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.hits(e, iterations = 2, roundProbe = p))
+    val plans = capture(Citations.hits(e, iterations = 2))
     // the probe fires on the authority half-step's un-cut araw frame; the
     // hub half-step is operation-identical on the transposed edge pin.
     // Round 1 reads the dense all-1 init: message join + aggregate, no
@@ -100,8 +100,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("personalized pagerank round: the pageRank shape — 2 equi-joins + 1 dangling fold") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p =>
-      Citations.personalizedPageRank(e, iterations = 2, roundProbe = p))
+    val plans = capture(Citations.personalizedPageRank(e, iterations = 2))
     val plan = plans(1)
     auditCommon("personalizedPageRank", plan)
     assert(equiJoins(plan) === 2, s"ppr round joins changed:\n$plan")
@@ -110,7 +109,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("components round: message join + zip join carrying the chg flag, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.components(e, roundProbe = p))
+    val plans = capture(Citations.components(e))
     for (r <- Seq(1, 2)) {
       auditCommon("components", plans(r))
       // min-message join (und ⋈ labels, hash-building the node-scale
@@ -142,9 +141,9 @@ class IterativePlanSpec extends AnyFunSuite {
       .where(length(col("w")).between(1, 32))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
     val plans = scala.collection.mutable.Map[Int, String]()
-    graft.operators.TextAnalysis.bpeMergeList(words, rounds = 2,
-      roundProbe = (r, df, _) =>
-        if (r <= 2) plans(r) = df.queryExecution.executedPlan.toString)
+    Fixpoint.observing((r, df) =>
+      if (r <= 2) plans(r) = df.queryExecution.executedPlan.toString)(
+      graft.operators.TextAnalysis.bpeMergeList(words, rounds = 2))
     Seq(1, 2).foreach { r =>
       val plan = plans(r)
       auditCommon(s"bpeMerges round $r", plan)
@@ -161,7 +160,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("lpa round: message join + label zip, ONE repartition feeding both plurality aggregates") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.lpa(e, rounds = 2, roundProbe = p))
+    val plans = capture(Citations.lpa(e, rounds = 2))
     for (r <- Seq(1, 2)) {
       val plan = plans(r)
       auditCommon("lpa", plan)
@@ -189,7 +188,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("louvain round: message join + 3 side-frame zips + sigma build, no cartesians") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.louvain(e, rounds = 2, roundProbe = p))
+    val plans = capture(Citations.louvain(e, rounds = 2))
     for (r <- Seq(1, 2)) {
       val plan = plans(r)
       auditCommon("louvain", plan)
@@ -207,7 +206,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("bfs hop: frontier join + sigma aggregate + reached anti-join, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.bfsPaths(e, roundProbe = p))
+    val plans = capture(Citations.bfsPaths(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("bfsPaths", plan)
@@ -221,7 +220,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("closeness wave: frontier join + distinct + reached anti-join, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.closeness(e, roundProbe = p))
+    val plans = capture(Citations.closeness(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("closeness", plan)
@@ -235,7 +234,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("scc closure round: frontier join + distinct + visited anti-join, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.sccPivot(e, roundProbe = p))
+    val plans = capture(Citations.sccPivot(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("sccPivot", plan)
@@ -254,7 +253,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("sccLayers round: candidate join + max + level left-outer, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.sccLayers(e, roundProbe = p))
+    val plans = capture(Citations.sccLayers(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("sccLayers", plan)
