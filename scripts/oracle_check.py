@@ -44,6 +44,17 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
+    # the full oracled name set graft.Verify writes beside the map: a name
+    # in it with no twin in oracle_sql.json (a killed or subset dump) is a
+    # failure, not rows-only. Dumps from before the file existed lack it.
+    oracled = set()
+    keys_path = os.path.join(out_dir, "oracle_keys.json")
+    if os.path.exists(keys_path):
+        with open(keys_path) as f:
+            oracled = set(json.load(f))
+    else:
+        print(f"[warn] no oracle_keys.json in {out_dir}: "
+              "a missing twin reads as rows-only")
 
     n_ok = n_fail = 0
     spark_dirs = [d for d in os.listdir(out_dir)
@@ -70,6 +81,11 @@ def main():
         if name in skips:
             print(f"[skip] {name}: {skips[name]}")
             rec(name, spark_rows=n_spark, err=f"skipped: {skips[name]}")
+            continue
+        if name not in oracles and name in oracled:
+            print(f"[FAIL] {name}: oracled query missing from oracle_sql.json")
+            rec(name, spark_rows=n_spark, err="oracle_sql_missing")
+            n_fail += 1
             continue
         if name not in oracles:
             print(f"[rows-only] {name}: {n_spark} rows")

@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, GraftFrames, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 
-/** Block-manager lifecycle for `localCheckpoint`-pinned frames.
+/** Block-manager lifecycle for `localCheckpoint`-pinned frames, and the
+  * one keyed cut ([[cut]]) that declares its partitioning downstream.
   *
   * Every eager `localCheckpoint()` leaves its materialized partitions in
   * the block manager until the RDD is unpersisted or the JVM dies —
@@ -44,54 +47,58 @@ private[graft] object Blocks {
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
-  /** Eager `localCheckpoint()` that KEEPS the frame's hash partitioning
-    * visible to downstream plans, at a size-aware partition count.
+  /** Eager `localCheckpoint()` that declares its hash partitioning on
+    * `keys` to downstream plans, at a size-aware partition count.
     *
-    * When to pin: only when a consumer of the cut keys on the cut's own
-    * partitioning — a per-round join or aggregate on the `repartition`
-    * key, which then plans no exchange. A frame whose consumers key on
-    * anything else (a canonical `(a, b)` edge set read by degree joins
-    * and node-keyed semi-joins) gains nothing from the pin and pays for
-    * it, so it takes a plain `localCheckpoint()`.
+    * When to key a cut: only when a consumer of the cut joins or groups
+    * on `keys`, and then plans no exchange on that side. A frame whose
+    * consumers key on anything else (a canonical `(a, b)` edge set read
+    * by degree joins and node-keyed semi-joins) gains nothing from the
+    * declaration and pays for the shuffle, so it takes a plain
+    * `localCheckpoint()`.
     *
-    * Mechanism: under AQE a checkpoint captures an
-    * `AdaptiveSparkPlanExec`, whose `outputPartitioning` reads as
-    * `UnknownPartitioning`, so the cut materializes with AQE off. AQE's
-    * partition coalescing was the size-awareness, so the cut sets an
-    * explicit width from its inputs' real sizes ([[cutPartitions]]).
-    * Results are identical either way; only plan shape and partition
-    * counts change.
-    *
-    * Thread-safety: the conf flip is synchronized on the session, but a
-    * query planned concurrently in the window still observes AQE off —
-    * the harness mains are single-threaded, which this primitive
-    * assumes. */
-  def pinnedCut(df: DataFrame): DataFrame = {
+    * Mechanism: the cut materializes `df.repartition(n, keys)` under the
+    * session's own conf. That is a REPARTITION_BY_NUM exchange, which
+    * AQE never coalesces, and which `EnsureRequirements` drops when its
+    * input is already `HashPartitioning(keys, n)`. A checkpoint taken
+    * under AQE captures an adaptive plan whose partitioning reads as
+    * unknown, so the cut re-wraps the checkpoint's `LogicalRDD` with the
+    * `HashPartitioning(keys, n)` it was written with, keeping the
+    * checkpoint's stats and constraints. The width `n` is
+    * [[cutPartitions]]. Results are identical to a plain checkpoint;
+    * only plan shape and partition counts change. */
+  def cut(df: DataFrame, keys: String*): DataFrame = cut(df, cutPartitions(df), keys)
+
+  /** [[cut]] at an explicit width. A frame whose last operator shuffles
+    * on the keys itself (a dedup, window or aggregate) takes
+    * `repartition(n, keys)` beneath that operator, with `n` from
+    * [[cutPartitions]], and passes the same `n` here: the cut's own
+    * exchange then folds into that one instead of adding a second. */
+  private[graft] def cut(df: DataFrame, n: Int, keys: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, "a keyed cut needs at least one key")
     val spark = df.sparkSession
-    // escape hatch (dev A/B probe + production fallback): pin=false
-    // makes the cut a plain AQE-governed localCheckpoint (the r14 shape);
-    // a value that is not a boolean reads as the default, never throws
-    if (!spark.conf.getOption("spark.graft.cut.pin")
-          .forall(v => scala.util.Try(v.trim.toBoolean).getOrElse(true)))
-      return df.localCheckpoint()
-    val n = cutPartitions(df)
-    spark.synchronized {
-      val conf = spark.conf
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val spKey = "spark.sql.shuffle.partitions"
-      val prevAqe = conf.get(aqeKey)
-      val prevSp = conf.get(spKey)
-      conf.set(aqeKey, "false")
-      conf.set(spKey, n.toString)
-      try df.localCheckpoint()
-      finally { conf.set(aqeKey, prevAqe); conf.set(spKey, prevSp) }
-    }
+    val l = df.repartition(n, keys.map(col): _*).localCheckpoint()
+      .queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val resolver = spark.sessionState.conf.resolver
+    val keyAttrs = keys.map(k => l.output.find(a => resolver(a.name, k)).get)
+    GraftFrames.ofRows(spark, LogicalRDD(l.output, l.rdd,
+      HashPartitioning(keyAttrs, n), l.outputOrdering, l.isStreaming)(
+      spark.asInstanceOf[classic.SparkSession], Some(l.stats), Some(l.constraints)))
   }
 
-  /** Data-proportional partition count for [[pinnedCut]]: the summed
-    * REAL byte size of the frame's leaf inputs over the target partition
-    * size (`spark.graft.cut.partitionBytes`, a byte string, default
-    * `64m`), clamped to [1, 262144]. Leaf sizes come from facts, not optimizer guesses:
+  /** Target bytes per cut partition, and the least width of a sized cut:
+    * a 1-partition cut satisfies EVERY required distribution, so
+    * downstream per-round aggregates lose their Exchange nodes — and with
+    * them the ReusedExchange reuse points that deduplicate shared
+    * subtrees (measured at sf0.1: citation_scc shuffle-read bytes
+    * 227 MB → 562 MB at floor 1, the h1 subtree recomputed per
+    * reference). */
+  private val TargetBytes = 64L << 20
+  private val MinPartitions = 4
+
+  /** Data-proportional partition count for [[cut]]: the summed REAL byte
+    * size of the frame's leaf inputs over `target` (64 MiB), clamped to
+    * [4, 262144]. Leaf sizes come from facts, not optimizer guesses:
     * file-relation leaves report their actual file bytes; checkpointed
     * leaves (`LogicalRDD`) report their persisted block bytes from the
     * block manager (in-memory deserialized rows, so a conservative
@@ -105,12 +112,9 @@ private[graft] object Blocks {
     * slice of their inputs (a BFS frontier still counts the full edge
     * leaf), which costs some task-count slack at scale but is safe in
     * both directions. */
-  private[graft] def cutPartitions(df: DataFrame): Int = {
+  private[graft] def cutPartitions(df: DataFrame, target: Long = TargetBytes): Int = {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     val spark = df.sparkSession
-    val conf = spark.conf
-    val target = math.max(1L, org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(conf.get("spark.graft.cut.partitionBytes", "64m")))
     // defaultSizeInBytes is the stats value of "no idea" (Long.MaxValue
     // unless the user lowered it) — treat anything that large as unknown.
     val unknown = BigInt(spark.sessionState.conf.defaultSizeInBytes)
@@ -121,17 +125,9 @@ private[graft] object Blocks {
       case leaf => known(leaf.stats.sizeInBytes)
     }
     val bytes = sizes.sum
-    // the floor is > 1 by default: a 1-partition pinned frame satisfies
-    // EVERY required distribution, so downstream per-round aggregates
-    // lose their Exchange nodes — and with them the ReusedExchange reuse
-    // points that deduplicate shared subtrees (measured at sf0.1:
-    // citation_scc shuffle-read bytes 227 MB → 562 MB at floor 1, the
-    // h1 subtree recomputed per reference)
-    val floor = conf.getOption("spark.graft.cut.minPartitions")
-      .map(_.toInt).getOrElse(4).max(1)
-    if (bytes <= 0) conf.get("spark.sql.shuffle.partitions").toInt
+    if (bytes <= 0) spark.sessionState.conf.defaultNumShufflePartitions
     else ((bytes + target - 1) / target)
-      .min(BigInt(262144)).max(BigInt(floor)).toInt
+      .min(BigInt(262144)).max(BigInt(MinPartitions)).toInt
   }
 
   /** Persisted block bytes (memory + disk) of RDD `rddId`, or None when

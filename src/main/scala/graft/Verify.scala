@@ -53,9 +53,15 @@ object Verify {
     // drift class: late-added queries silently missing from sf0.1 gate +
     // bench detail). Always the FULL set, even on subset dev dumps — the
     // contract is SparkEntry.queries, not whatever this run dumped.
+    def keys(names: Iterable[String]) =
+      names.toSeq.sorted.mkString("[\"", "\", \"", "\"]")
     Files.writeString(Paths.get(s"$outDir/query_keys.json"),
-      SparkEntry.queries.keySet.toSeq.sorted
-        .mkString("[\"", "\", \"", "\"]"))
+      keys(SparkEntry.queries.keySet))
+    // same contract for the oracled subset: oracle_check.py fails a
+    // query named here whose twin is missing from oracle_sql.json (a
+    // killed or subset dump), instead of reading it as rows-only
+    Files.writeString(Paths.get(s"$outDir/oracle_keys.json"),
+      keys(SparkEntry.oracleSql.keySet ++ SparkEntry.dynamicOracleNames))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Fixpoint, Tables}
+import graft.{Blocks, Fixpoint, Tables}
 
 /** Citation analysis — the reference's entire workload, Spark-first.
   *
@@ -190,12 +190,24 @@ object Citations {
   private def triangleRows(edges: DataFrame): (DataFrame, DataFrame) =
     orientedTriangles(undirected(edges))
 
+  /** Both orientations of the non-loop edges, deduped, as a keyed cut on
+    * `u`, the key the undirected loops (lpa, mis, louvain) join and group
+    * on. The cut's width is taken up front, so the dedup runs inside the
+    * cut's own exchange: one shuffle, at the cut's width. */
+  private def undirectedByU(edges: DataFrame): DataFrame = {
+    val e = edges.where(col("src") =!= col("dst"))
+    val both = e.select(col("src").as("u"), col("dst").as("v"))
+      .union(e.select(col("dst").as("u"), col("src").as("v")))
+    val n = Blocks.cutPartitions(both)
+    Blocks.cut(both.repartition(n, col("u")).distinct(), n, Seq("u"))
+  }
+
   /** The canonical undirected edge set (a < b, deduped, self-loops
     * dropped), cut once with an eager plain checkpoint: every consumer
     * re-reads it (degree aggregate and joins, wedge sides, closing-edge
     * probe, peel semi-joins), and without the cut each would re-scan the
     * source and re-run the dedup exchange. No consumer keys on its
-    * `(a, b)` layout, so it is not pinned ([[graft.Blocks.pinnedCut]]).
+    * `(a, b)` layout, so it is not a keyed cut ([[graft.Blocks.cut]]).
     * The harness sweeps the block between queries; the peels release
     * it via graft.Blocks. */
   private def undirected(edges: DataFrame): DataFrame =
@@ -328,8 +340,7 @@ object Citations {
     * frame; the caller owns its release. */
   private def hyperBallLoop(edges: DataFrame, hops: Int, lgK: Int)
       (perHop: (Int, DataFrame) => Unit): DataFrame = {
-    val e = edges.where(col("src") =!= col("dst")).distinct()
-      .repartition(col("src")).pinnedCut
+    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
     val balls0 = nodes.groupBy(col("id"))
@@ -562,7 +573,7 @@ object Citations {
         round(lit(1.0) / col("deg").cast("double"), 9)
           .cast("decimal(18,9)").as("term"))
     preCutProbe(fRaw)
-    val f = fRaw.pinnedCut
+    val f = Blocks.cut(fRaw, "src")
     val a = f.select(col("src"), col("dst").as("paper_a"), col("term"))
     val b = f.select(col("src"), col("dst").as("paper_b"))
     val linked = edges.where(col("src") =!= col("dst"))
@@ -677,11 +688,10 @@ object Citations {
   def linkPredictJaccard(edges: DataFrame, maxOutDegree: Int = 100): DataFrame = {
     val e = edges.where(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
-    val f = e
+    val f = Blocks.cut(e
       .join(e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .where(col("deg") <= maxOutDegree), Seq("src"))
-      .select(col("src"), col("dst"))
-      .pinnedCut
+      .select(col("src"), col("dst")), "src")
     val nb = f.groupBy(col("dst")).agg(count(lit(1)).as("d"))
     val a = f.select(col("src"), col("dst").as("paper_a"))
     val b = f.select(col("src"), col("dst").as("paper_b"))
@@ -837,7 +847,7 @@ object Citations {
     // plan is cut, never the arithmetic) — probe-verified, and the hash
     // oracle pins it. The final round always cuts, keeping the returned
     // plan bounded.
-    // plain (AQE-governed) cuts, NOT pinnedCut: pageRank's per-round
+    // plain (AQE-governed) cuts, NOT Blocks.cut: pageRank's per-round
     // stages do real compute (the contribs join + aggregate over the
     // full edge frame), and AQE's per-stage widths (wide maps, coalesced
     // reads) beat any single pinned width at the measured scale — r16
@@ -907,7 +917,7 @@ object Citations {
   def personalizedPageRank(edges: DataFrame, seedK: Int = 5,
                            iterations: Int = 6,
                            damping: Double = 0.85): DataFrame = {
-    // plain AQE cut, not pinnedCut — the pageRank rationale above
+    // plain AQE cut, not Blocks.cut — the pageRank rationale above
     // (measured at sf0.1: pinned 6.85-7.72 s vs 5.05 s for this shape)
     val e = edges.repartition(col("src")).localCheckpoint()
     val nodes = e.select(col("src").as("id"))
@@ -1163,10 +1173,16 @@ object Citations {
     *    aggregate no HITS formulation avoids). */
   def hits(edges: DataFrame, iterations: Int = 6): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
-    val eSrc = edges.repartition(col("src")).pinnedCut
-    val eDst = eSrc.repartition(col("dst")).pinnedCut
-    val nodes = eSrc.select(col("src").as("id"))
-      .union(eSrc.select(col("dst").as("id"))).distinct().pinnedCut
+    val eSrc = Blocks.cut(edges, "src")
+    val eDst = Blocks.cut(eSrc, "dst")
+    // each union side is hashed on its id; while both cuts sit at the
+    // same width (the floor, 4) the union keeps that partitioning and the
+    // distinct plans no exchange. At scale eSrc is sized from the edges'
+    // file bytes, eDst from eSrc's block bytes and this cut from both, so
+    // the widths can differ and the distinct and this cut re-exchange
+    // (once, at set-up; the rounds read the cuts as declared).
+    val nodes = Blocks.cut(eSrc.select(col("src").as("id"))
+      .union(eDst.select(col("dst").as("id"))).distinct(), "id")
     // round 0: hub = 1.0 on every node (dense by definition); no authority
     val hub0 = nodes.select(col("id"), lit(1.0).as("hub"))
     val (auth, hub) = Fixpoint.rounds(iterations, (null: DataFrame, hub0)) { case (r, (_, hub)) =>
@@ -1278,14 +1294,13 @@ object Citations {
     * loop (the returned frame reads only the final cut). */
   def components(edges: DataFrame, rounds: Int = 10): DataFrame = {
     // both directions: a node hears the labels of every neighbor
-    val und = edges.where(col("src") =!= col("dst"))
+    val und = Blocks.cut(edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
       .union(edges.where(col("src") =!= col("dst"))
-        .select(col("dst").as("u"), col("src").as("v")))
-      .repartition(col("u")).pinnedCut
+        .select(col("dst").as("u"), col("src").as("v"))), "u")
     // und is partitioned on u, so the node-id distinct needs no exchange
-    val labels0 = und.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).pinnedCut
+    val labels0 = Blocks.cut(und.select(col("u").as("id")).distinct()
+      .select(col("id"), col("id").as("label")), "id")
     val (labels, _) = Fixpoint.converge("components", rounds, (labels0, false))(_._2) {
       case (r, (labels, _)) =>
         val msg = und.join(labels.hint("shuffle_hash"), und("u") === labels("id"))
@@ -1386,16 +1401,17 @@ object Citations {
     // thousands at 100 TB
     // F rows walk src→dst, B rows walk dst→src; one pinned partitioning
     // on the tagged probe key serves both directions every round, and
-    // the (k, t) dedup runs inside that same exchange
-    val e2 = raw
+    // the (k, t) dedup runs inside that same exchange: the cut's width is
+    // taken up front so its own repartition folds into this one
+    val tagged = raw
       .select(concat(lit("F:"), col("src")).as("k"),
         concat(lit("F:"), col("dst")).as("t"))
       .unionByName(raw
         .select(concat(lit("B:"), col("dst")).as("k"),
           concat(lit("B:"), col("src")).as("t")))
-      .repartition(col("k"))
-      .dropDuplicates("k", "t")
-      .pinnedCut
+    val n = Blocks.cutPartitions(tagged)
+    val e2 = Blocks.cut(tagged.repartition(n, col("k")).dropDuplicates("k", "t"),
+      n, Seq("k"))
     // pivot from the F-slice: t = "F:" ∥ dst, so groupBy(t) is the
     // in-degree count and the constant prefix preserves the id tie-order
     val pivot = e2.where(col("k").startsWith("F:"))
@@ -1503,8 +1519,7 @@ object Citations {
     // same width rule as sccPivot: the cut sizes its own partition count
     // from real input bytes (Blocks.cutPartitions) — per-trim-round
     // stages are overhead-bound at sf0.1, edge-proportional at 100 TB
-    val e0 = edges.where(col("src") =!= col("dst")).distinct()
-      .repartition(col("src")).pinnedCut
+    val e0 = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
     val nodes = e0.select(col("src").as("id"))
       .unionByName(e0.select(col("dst").as("id"))).distinct()
       .localCheckpoint()
@@ -1732,18 +1747,17 @@ object Citations {
     // same width rule as sccPivot: condensation frames are ≤ node-sized,
     // so per-round stages are overhead-bound — the cut sizes its width
     // from real input bytes (Blocks.cutPartitions)
-    val ce = edges.where(col("src") =!= col("dst")).distinct()
+    val ce = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct()
       .join(labels.select(col("paper_id").as("src"), col("scc_id").as("src_scc")),
         Seq("src"))
       .join(labels.select(col("paper_id").as("dst"), col("scc_id").as("dst_scc")),
         Seq("dst"))
       .where(col("src_scc") =!= col("dst_scc"))
-      .select(col("src_scc"), col("dst_scc")).distinct()
-      .repartition(col("src_scc"))
-      .pinnedCut
-    // one row per SCC; scc_size rides along from sccAll's labeling
+      .select(col("src_scc"), col("dst_scc")).distinct(), "src_scc")
+    // one row per SCC; scc_size rides along from sccAll's labeling. A
+    // plain cut: no consumer keys on its (scc_id, scc_size) partitioning
     val sccs = labels.select(col("scc_id"), col("scc_size")).distinct()
-      .pinnedCut
+      .localCheckpoint()
     if (releaseLabels) graft.Blocks.release(labels)
     val levels0 = sccs.select(col("scc_id"), lit(0L).as("level")).localCheckpoint()
     // the condensation is acyclic, so the fixpoint is the DAG's max level
@@ -1830,14 +1844,9 @@ object Citations {
     * v) — no windows, no cartesians; labels cut per round with
     * superseded cuts released ([[components]] lifecycle). */
   def lpa(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.where(col("src") =!= col("dst"))
-        .select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-      .repartition(col("u")).pinnedCut
-    val labels0 = und.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).pinnedCut
+    val und = undirectedByU(edges)
+    val labels0 = Blocks.cut(und.select(col("u").as("id")).distinct()
+      .select(col("id"), col("id").as("label")), "id")
     val labels = Fixpoint.rounds(rounds, labels0) { (r, labels) =>
       // ONE exchange feeds both aggregates: repartition on the message key
       // v, under which hashpartitioning(v) satisfies the (v,label) AND the
@@ -1928,13 +1937,8 @@ object Citations {
     * cuts are unioned lazily at the end, ≤rounds frames of disjoint
     * nodes). */
   def mis(edges: DataFrame, rounds: Int = 12): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.where(col("src") =!= col("dst"))
-        .select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-    val e0 = und.repartition(col("u")).pinnedCut
-    val alive0 = e0.select(col("u").as("id")).distinct().pinnedCut
+    val e0 = undirectedByU(edges)
+    val alive0 = Blocks.cut(e0.select(col("u").as("id")).distinct(), "id")
     // the LCG priority hashes THROUGH a BIGINT cast; a non-numeric id
     // would cast to NULL and null-poison its key, silently starving the
     // node of wins — fail loudly instead (the count scans blocks the
@@ -1978,7 +1982,7 @@ object Citations {
     graft.Blocks.release(alive)
     graft.Blocks.release(e)
     if (decidedCuts.isEmpty) // empty graph: zero decisions, schema intact
-      und.select(col("u").as("paper_id"), lit(true).as("in_mis"),
+      e0.select(col("u").as("paper_id"), lit(true).as("in_mis"),
         lit(0).as("round")).limit(0)
     else decidedCuts.reduce(_ unionAll _)
       .select(col("id").as("paper_id"), col("in_mis"),
@@ -2232,19 +2236,14 @@ object Citations {
     * first. `labels` is an eager localCheckpoint, safe past release. */
   private def louvainCore(edges: DataFrame, rounds: Int)
   : (DataFrame, DataFrame, DataFrame) = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.where(col("src") =!= col("dst"))
-        .select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-      .repartition(col("u")).pinnedCut
-    val deg = und.groupBy(col("u").as("id"))
-      .agg(count(lit(1)).as("deg")).pinnedCut
+    val und = undirectedByU(edges)
+    val deg = Blocks.cut(und.groupBy(col("u").as("id"))
+      .agg(count(lit(1)).as("deg")), "id")
     val wTot = und.count() // = Σdeg = 2m, exact
     val offset = lit(new java.math.BigDecimal("1000000000000000000000000"))
       .cast("decimal(38,0)") // 10^24 > any |score| this side of yottascale
     val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    val labels0 = deg.select(col("id"), col("id").as("label")).pinnedCut
+    val labels0 = Blocks.cut(deg.select(col("id"), col("id").as("label")), "id")
     val labels = Fixpoint.rounds(rounds, labels0) { (r, labels) =>
       val sigma = labels.join(deg, Seq("id"))
         .groupBy(col("label").as("c")).agg(sum(col("deg")).as("tot"))
@@ -2298,12 +2297,7 @@ object Citations {
     * undirected frame + degrees rebuild from the edges (one shuffle —
     * cheap against the 4-round sweep they replace). */
   def louvainStatsFrom(edges: DataFrame, labelsIn: DataFrame): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.where(col("src") =!= col("dst"))
-        .select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-      .repartition(col("u")).pinnedCut
+    val und = undirectedByU(edges)
     val deg = und.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
     val labels = labelsIn
       .select(col("paper_id").as("id"), col("community").as("label"))
@@ -2365,14 +2359,9 @@ object Citations {
     * the gate hashes every move AND every accept decision. */
   def louvainMlFrom(edges: DataFrame, labelsIn: DataFrame,
                     rounds2: Int = 4): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.where(col("src") =!= col("dst"))
-        .select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-      .repartition(col("u")).pinnedCut
-    val deg = und.groupBy(col("u").as("id"))
-      .agg(count(lit(1)).as("deg")).pinnedCut
+    val und = undirectedByU(edges)
+    val deg = Blocks.cut(und.groupBy(col("u").as("id"))
+      .agg(count(lit(1)).as("deg")), "id")
     val wTot = und.count() // Σ deg = 2m — invariant under coarsening
     val labels = labelsIn
       .select(col("paper_id").as("id"), col("community").as("label"))
@@ -2383,16 +2372,17 @@ object Citations {
     // discipline — randomWalks, PLANS.md r13).
     val lu = labels.select(col("id").as("uid"), col("label").as("cu"))
     val lv = labels.select(col("id").as("vid"), col("label").as("cv"))
-    val cw = und
+    // the aggregate's exchange on cu is the cut's (width taken up front)
+    val cross = und
       .join(lu.hint("shuffle_hash"), und("u") === col("uid"))
       .join(lv.hint("shuffle_hash"), und("v") === col("vid"))
       .where(col("cu") =!= col("cv"))
+    val nCw = Blocks.cutPartitions(cross)
+    val cw = Blocks.cut(cross.repartition(nCw, col("cu"))
       .groupBy(col("cu").as("u"), col("cv").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .repartition(col("u")).pinnedCut
-    val degW = labels.join(deg, Seq("id"))
-      .groupBy(col("label").as("id")).agg(sum(col("deg")).as("deg"))
-      .pinnedCut
+      .agg(count(lit(1)).as("w")), nCw, Seq("u"))
+    val degW = Blocks.cut(labels.join(deg, Seq("id"))
+      .groupBy(col("label").as("id")).agg(sum(col("deg")).as("deg")), "id")
     graft.Blocks.release(und)
     graft.Blocks.release(deg)
     val offset = lit(new java.math.BigDecimal("1000000000000000000000000"))
@@ -2417,7 +2407,7 @@ object Citations {
         .collect()(0).getDecimal(0)
       BigInt(wTot) * BigInt(internal) - BigInt(totSq.toBigInteger)
     }
-    val l20 = degW.select(col("id"), col("id").as("label")).pinnedCut
+    val l20 = Blocks.cut(degW.select(col("id"), col("id").as("label")), "id")
     // (accepted labels, their score, stalled)
     val (l2, _, _) = Fixpoint.rounds(rounds2, (l20, scoreOf(l20), false),
         until = (s: (DataFrame, BigInt, Boolean)) => s._3) { case (r, (l2, curScore, _)) =>
@@ -2658,11 +2648,13 @@ object Citations {
     * one window pass over the deduped edges, paid once. */
   def randomWalks(edges: DataFrame, walks: Int = 2, steps: Int = 4): DataFrame = {
     val e = edges.where(col("src") =!= col("dst")).distinct()
-    val nb = e.select(col("src"), col("dst"),
+    // the window's exchange on src is the cut's: its width is taken up
+    // front so the cut plans no second shuffle
+    val n = Blocks.cutPartitions(e)
+    val nb = Blocks.cut(e.repartition(n, col("src")).select(col("src"), col("dst"),
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
           .cast("long").as("rank"),
-        count(lit(1)).over(Window.partitionBy(col("src"))).as("outdeg"))
-      .repartition(col("src")).pinnedCut
+        count(lit(1)).over(Window.partitionBy(col("src"))).as("outdeg")), n, Seq("src"))
     // detached cut: degs shares no lineage (or exprIds) with nb, so the
     // per-step double-reference (degs for the rank pick, nb for the hop)
     // never trips the self-join ambiguity check
@@ -2778,18 +2770,15 @@ object Citations {
     * probe. Sinks truncate walks exactly as [[randomWalks]]. */
   def node2vecWalks(edges: DataFrame, walks: Int = 2, steps: Int = 4): DataFrame = {
     val e = edges.where(col("src") =!= col("dst")).distinct()
-    val nb = e.select(col("src"), col("dst"))
-      .repartition(col("src")).pinnedCut
+    val nb = Blocks.cut(e.select(col("src"), col("dst")), "src")
     // detached re-aliased cut for the triangle probe (the randomWalks
     // degs discipline — no shared exprIds with nb)
-    val adj = nb.select(col("src").as("asrc"), col("dst").as("adst"))
-      .pinnedCut
-    val degs = nb.groupBy(col("src").as("dsrc"))
-      .agg(count(lit(1)).as("ddeg")).pinnedCut
-    val ranked = nb.select(col("src"), col("dst"),
+    val adj = Blocks.cut(nb.select(col("src").as("asrc"), col("dst").as("adst")), "asrc")
+    val degs = Blocks.cut(nb.groupBy(col("src").as("dsrc"))
+      .agg(count(lit(1)).as("ddeg")), "dsrc")
+    val ranked = Blocks.cut(nb.select(col("src"), col("dst"),
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
-          .cast("long").as("rank"))
-      .pinnedCut
+          .cast("long").as("rank")), "src")
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     // step 1: uniform (no prev) — the randomWalks rule
@@ -2959,8 +2948,7 @@ object Citations {
     * everything is exact integer arithmetic, so the query hash-oracles
     * with the identically-unrolled twin. */
   def bfsPaths(edges: DataFrame, hops: Int = 4): DataFrame = {
-    val e = edges.where(col("src") =!= col("dst")).distinct()
-      .repartition(col("src")).pinnedCut
+    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
     val out = bfsPathsFrom(e, hops)
     graft.Blocks.release(e)
     out
@@ -3016,9 +3004,10 @@ object Citations {
     * engines therefore run the identical rounded recurrence and the
     * hash verifies every δ exactly. */
   def betweenness(edges: DataFrame, hops: Int = 4): DataFrame = {
-    val e = edges.where(col("src") =!= col("dst")).distinct()
-      .repartition(col("src")).pinnedCut
-    val fwd = bfsPathsFrom(e, hops).localCheckpoint()
+    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
+    // a projection over bfsPathsFrom's own checkpoint, which the
+    // returned frame reads
+    val fwd = bfsPathsFrom(e, hops)
     var delta = fwd.where(col("dist") === hops)
       .select(col("paper_id").as("id"), lit(0.0).as("delta"))
       .localCheckpoint()
@@ -3043,6 +3032,7 @@ object Citations {
       delta = dk
       acc = acc.unionByName(dk)
     }
+    graft.Blocks.release(e)
     fwd.join(acc.withColumnRenamed("id", "paper_id"), Seq("paper_id"))
       .select(col("paper_id"), col("dist"), col("sigma"), col("delta"))
   }
@@ -3056,7 +3046,7 @@ object Citations {
         lit(0).as("dist"), lit(new java.math.BigDecimal(1))
           .cast("decimal(38,0)").as("sigma"))
     val seedCut = seed.localCheckpoint()
-    val (reached, _) = Fixpoint.rounds(hops, (seedCut, seedCut)) {
+    val (reached, frontier) = Fixpoint.rounds(hops, (seedCut, seedCut)) {
       case (r, (reached, frontier)) =>
         val cut = r.cut(e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
           .groupBy(e("dst").as("id"))
@@ -3065,6 +3055,8 @@ object Citations {
           .select(col("id"), lit(r.i).as("dist"), col("sigma")))
         (r.cut(reached.unionByName(cut)), cut)
     }
+    // the last frontier is already folded into reached
+    if (frontier ne reached) graft.Blocks.release(frontier)
     // σ accumulated in DECIMAL(38,0) precisely because path counts grow
     // multiplicatively; the BIGINT output boundary (decimal stringifies
     // differently across engines) must therefore fail LOUDLY on overflow
@@ -3125,15 +3117,14 @@ object Citations {
     * double adds on the 6-dp grid), so the twin hash-matches without
     * decimal accumulation. */
   def closeness(edges: DataFrame, hops: Int = 4, nSeeds: Int = 8): DataFrame = {
-    val e = edges.where(col("src") =!= col("dst")).distinct()
-      .repartition(col("src")).pinnedCut
+    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
     val seeds = counts(e)
       .orderBy(col("citations").desc, col("paper_id").asc).limit(nSeeds)
       .select(col("paper_id").as("seed"))
     val seedCut = seeds
       .select(col("seed"), col("seed").as("id"), lit(0).as("dist"))
       .localCheckpoint()
-    val (reached, _) = Fixpoint.rounds(hops, (seedCut, seedCut)) {
+    val (reached, frontier) = Fixpoint.rounds(hops, (seedCut, seedCut)) {
       case (r, (reached, frontier)) =>
         val cut = r.cut(e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
           .select(col("seed"), e("dst").as("id")).distinct()
@@ -3142,6 +3133,7 @@ object Citations {
           .select(col("seed"), col("id"), lit(r.i).as("dist")))
         (r.cut(reached.unionByName(cut)), cut)
     }
+    if (frontier ne reached) graft.Blocks.release(frontier)
     val ns = (1 to hops).map(d =>
       sum(when(col("dist") === d, 1L).otherwise(0L)).as(s"n$d"))
     val harmonic = (1 to hops).map(d =>
@@ -3334,15 +3326,19 @@ object Citations {
     * Total cost: the pair shuffle + the triangle join — the census is
     * free once you can count triangles, which is the Suri–Vassilvitskii
     * point made census-shaped. */
-  def motifCensus(edges: DataFrame): DataFrame =
-    motifCensusFromStates(
-      edges.where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"),
-          when(col("src") < col("dst"), 1).otherwise(0).as("f"),
-          when(col("src") > col("dst"), 1).otherwise(0).as("r"))
-        .groupBy(col("a"), col("b"))
-        .agg((max(col("f")) + lit(2) * max(col("r"))).as("st")))
+  def motifCensus(edges: DataFrame): DataFrame = {
+    val pairs = edges.where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"),
+        when(col("src") < col("dst"), 1).otherwise(0).as("f"),
+        when(col("src") > col("dst"), 1).otherwise(0).as("r"))
+    // the pair aggregate's exchange is the cut's: its width is taken up
+    // front so the cut plans no second shuffle
+    val n = Blocks.cutPartitions(pairs)
+    motifCensusFromStates(Blocks.cut(pairs.repartition(n, col("a"), col("b"))
+      .groupBy(col("a"), col("b"))
+      .agg((max(col("f")) + lit(2) * max(col("r"))).as("st")), n, Seq("a", "b")))
+  }
 
   /** The census over the [[graft.streaming.GraphStreams.pairViewStream]]
     * pair view — the serve path over streamed state (the
@@ -3350,14 +3346,13 @@ object Citations {
     * flags ARE the dyad state, so the census of a live-maintained graph
     * costs only this fold, never an edge-log replay. */
   def motifCensusFromPairView(view: DataFrame): DataFrame =
-    motifCensusFromStates(view.select(col("a"), col("b"),
-      (col("fwd") + lit(2) * col("rev")).cast("int").as("st")))
+    motifCensusFromStates(Blocks.cut(view.select(col("a"), col("b"),
+      (col("fwd") + lit(2) * col("rev")).cast("int").as("st")), "a", "b"))
 
-  /** Census core over the canonical dyad-state frame (a < b, st). */
-  private def motifCensusFromStates(states: DataFrame): DataFrame = {
-    // pinned: read by the node tallies, the triangle machinery, and the
-    // three per-triangle state joins
-    val p = states.pinnedCut
+  /** Census core over the canonical dyad-state frame (a < b, st), cut
+    * keyed on (a, b) by the caller: read by the node tallies, the
+    * triangle machinery, and the three per-triangle state joins. */
+  private def motifCensusFromStates(p: DataFrame): DataFrame = {
 
     // per-node (m, o, i) dyad tallies → combinatorial centered-wedge
     // totals per open class, collapsed to ONE row

@@ -249,10 +249,15 @@ class AnalyticsExtraSpec extends AnyFunSuite {
     } finally spark.conf.set(key, prev)
   }
 
+  // Left out: citation_louvain (+ _stats, _ml) and citation_scc_all
+  // (+ _condensation, _layers) read dataset-keyed label caches, so widths
+  // 4 and 8 would be answered from the width-1 run's labels.
   for (q <- Seq("citation_triangles", "citation_local_clustering",
                 "citation_ktruss", "citation_kcore", "citation_components",
                 "citation_lpa", "citation_mis", "citation_scc",
-                "citation_bfs_paths"))
+                "citation_bfs_paths", "citation_hits", "citation_link_predict",
+                "citation_jaccard", "citation_random_walks", "citation_node2vec",
+                "citation_betweenness", "citation_closeness", "citation_motifs"))
     test(s"$q: identical rows at shuffle.partitions 1/4/8") {
       val base = rowsAtWidth(q, 1)
       assert(base.nonEmpty, s"$q returned no rows at sf0.001")
@@ -715,6 +720,25 @@ class AnalyticsExtraSpec extends AnyFunSuite {
     assert(Seq(row._2, row._3, row._4, row._5) ===
       (1 to 4).map(d => byDist.getOrElse(d, 0L)))
     assert(row._6 === row._2 + row._3 + row._4 + row._5)
+  }
+
+  test("bfs_paths, betweenness, closeness: every checkpoint taken is released or read by the result") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val e = Citations.edges(spark, sf)
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "bfsPaths" -> (Citations.bfsPaths(_)),
+      "betweenness" -> (Citations.betweenness(_)),
+      "closeness" -> (Citations.closeness(_))).foreach { case (name, op) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = op(e)
+      val leaves = out.queryExecution.analyzed.collectLeaves()
+        .collect { case l: LogicalRDD => l.rdd }
+      val held = spark.sparkContext.getPersistentRDDs.keySet -- before --
+        leaves.map(_.id)
+      assert(held.isEmpty,
+        s"$name holds checkpoints its result never reads: RDDs ${held.toSeq.sorted}")
+      leaves.foreach(_.unpersist(blocking = false))
+    }
   }
 
   test("citation_reciprocity: hand fixture — dedup, self-loop drop, exact ratio") {

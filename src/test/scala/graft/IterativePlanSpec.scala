@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExchangeExec}
 
 import graft.operators.Citations
 
@@ -248,6 +250,44 @@ class IterativePlanSpec extends AnyFunSuite {
       assert(equiJoins(plan) === 5, s"scc closure joins changed:\n$plan")
       assert(plan.contains("LeftAnti"), s"scc visited check must anti-join:\n$plan")
       assert(bnlj(plan) === 0, s"scc grew a nested-loop join:\n$plan")
+    }
+  }
+
+  /** Round 1's physical plan with its exchanges placed (the sparkPlan
+    * through `EnsureRequirements`, still job-free), and every exchange in
+    * it that sits directly — through projections and filters only — on
+    * a scan whose columns are `cols`. */
+  private def edgeScanExchanges(cols: Seq[String])(run: => DataFrame)
+  : (Int, Seq[SparkPlan]) = {
+    var plan: SparkPlan = null
+    Fixpoint.observing((i, df) =>
+      if (i == 1) plan = EnsureRequirements().apply(df.queryExecution.sparkPlan))(run)
+    def isEdgeScan(p: SparkPlan): Boolean = p match {
+      case s: RDDScanExec => s.output.map(_.name) == cols
+      case p: ProjectExec => isEdgeScan(p.child)
+      case f: FilterExec => isEdgeScan(f.child)
+      case _ => false
+    }
+    (plan.collect { case s: RDDScanExec if isEdgeScan(s) => s }.size,
+      plan.collect { case x: ShuffleExchangeExec if isEdgeScan(x.child) => x })
+  }
+
+  test("keyed edge cuts: round 1 plans no exchange directly above the pinned edge scan") {
+    // the edge frame of each loop is cut keyed on its per-round join key;
+    // a cut that stops declaring that partitioning re-exchanges the full
+    // edge frame every round, which is the shape this guards
+    val e = Citations.edges(spark, sf)
+    Seq[(String, Seq[String], () => DataFrame)](
+      ("components", Seq("u", "v"), () => Citations.components(e)),
+      ("lpa", Seq("u", "v"), () => Citations.lpa(e, rounds = 2)),
+      ("mis", Seq("u", "v"), () => Citations.mis(e)),
+      ("hits", Seq("src", "dst"), () => Citations.hits(e, iterations = 2)),
+      ("sccPivot", Seq("k", "t"), () => Citations.sccPivot(e))
+    ).foreach { case (name, cols, run) =>
+      val (scans, exchanges) = edgeScanExchanges(cols)(run())
+      assert(scans > 0, s"$name round 1 reads no ${cols.mkString("(", ", ", ")")} edge scan")
+      assert(exchanges.isEmpty,
+        s"$name round 1 re-exchanges its pinned edge frame:\n${exchanges.mkString("\n")}")
     }
   }
 

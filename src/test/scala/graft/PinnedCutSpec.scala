@@ -11,14 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Citations
 
-/** Focused spec for the r16 size-aware [[Blocks.pinnedCut]] internals:
-  * the cut must (a) keep the hash partitioning visible downstream,
-  * (b) derive its partition count from real leaf bytes / target with
-  * the floor clamp, (c) remove the downstream exchange on the pinned
-  * key, (d) be a plain AQE checkpoint under `spark.graft.cut.pin=false`,
-  * and (e) never change results — plus the conf and size parsing the
-  * cut and [[Citations.probeSide]] share: byte confs honor sign and
-  * unit, unknown sizes never read as huge, malformed confs never throw. */
+/** Focused spec for the size-aware keyed [[Blocks.cut]]: the cut must
+  * (a) declare its hash partitioning on the keys downstream, (b) derive
+  * its partition count from real leaf bytes / target with the floor
+  * clamp, (c) remove the downstream exchange on the key, (d) never
+  * change results, and (e) never touch the session conf another query
+  * plans under — plus the size parsing the cut and
+  * [[Citations.probeSide]] share: byte confs honor sign and unit, and
+  * unknown sizes never read as huge. */
 class PinnedCutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -36,13 +36,13 @@ class PinnedCutSpec extends AnyFunSuite {
   private def src = (1 to 1000).map(i => (s"k${i % 97}", i)).toDF("k", "v")
 
   test("pinned cut keeps hash partitioning visible at the floor count") {
-    val cut = Blocks.pinnedCut(src.repartition(col("k")))
+    val cut = Blocks.cut(src, "k")
     cut.queryExecution.analyzed match {
       case l: LogicalRDD =>
         val hp = l.outputPartitioning
         assert(hp.isInstanceOf[HashPartitioning],
           s"expected HashPartitioning, got $hp")
-        // tiny frame -> the floor (default 4)
+        // tiny frame -> the floor (4)
         assert(hp.numPartitions == 4, s"expected floor 4, got $hp")
       case other => fail(s"checkpoint did not produce a LogicalRDD: $other")
     }
@@ -52,19 +52,16 @@ class PinnedCutSpec extends AnyFunSuite {
   test("cut width scales with leaf bytes over the target") {
     // a LocalRelation's stats are exact; a ~28 kB frame over a 1 kB
     // target must size well above the floor and match cutPartitions
-    withConf("spark.graft.cut.partitionBytes" -> "1024") {
-      val df = src.repartition(col("k"))
-      val n = Blocks.cutPartitions(df)
-      assert(n > 4, s"expected byte-derived width over the floor, got $n")
-      val cut = Blocks.pinnedCut(df)
-      assert(cut.rdd.getNumPartitions == n,
-        s"materialized ${cut.rdd.getNumPartitions} partitions, sized $n")
-      Blocks.release(cut)
-    }
+    val n = Blocks.cutPartitions(src, target = 1024)
+    assert(n > 4, s"expected byte-derived width over the floor, got $n")
+    val cut = Blocks.cut(src, n, Seq("k"))
+    assert(cut.rdd.getNumPartitions == n,
+      s"materialized ${cut.rdd.getNumPartitions} partitions, sized $n")
+    Blocks.release(cut)
   }
 
   test("downstream aggregate on the pinned key plans zero exchanges") {
-    val cut = Blocks.pinnedCut(src.repartition(col("k")))
+    val cut = Blocks.cut(src, "k")
     val agg = cut.groupBy(col("k")).agg(count(lit(1)))
     agg.collect()
     val finalPlan = agg.queryExecution.executedPlan.toString
@@ -74,21 +71,8 @@ class PinnedCutSpec extends AnyFunSuite {
     Blocks.release(cut)
   }
 
-  test("spark.graft.cut.pin=false degrades to a plain AQE checkpoint") {
-    withConf("spark.graft.cut.pin" -> "false") {
-      val cut = Blocks.pinnedCut(src.repartition(col("k")))
-      cut.queryExecution.analyzed match {
-        case l: LogicalRDD =>
-          assert(!l.outputPartitioning.isInstanceOf[HashPartitioning],
-            s"pin=false must not pin, got ${l.outputPartitioning}")
-        case other => fail(s"not a LogicalRDD: $other")
-      }
-      Blocks.release(cut)
-    }
-  }
-
   test("pinned and plain cuts produce identical rows") {
-    val a = Blocks.pinnedCut(src.repartition(col("k")))
+    val a = Blocks.cut(src, "k")
       .groupBy(col("k")).agg(sum(col("v")).as("s"))
       .collect().map(_.toString).sorted
     val b = src.repartition(col("k")).localCheckpoint()
@@ -117,21 +101,6 @@ class PinnedCutSpec extends AnyFunSuite {
       s"expected fallback to session shuffle partitions, got $n")
   }
 
-  test("cut width parses spark.graft.cut.partitionBytes as a byte string") {
-    val df = src.repartition(col("k"))
-    val plain = withConf("spark.graft.cut.partitionBytes" -> "1024") {
-      Blocks.cutPartitions(df)
-    }
-    val unit = withConf("spark.graft.cut.partitionBytes" -> "1k") {
-      Blocks.cutPartitions(df)
-    }
-    assert(plain > 4 && unit === plain, s"1024 -> $plain but 1k -> $unit")
-    // the documented default spelled out: tiny frame -> the floor
-    withConf("spark.graft.cut.partitionBytes" -> "64m") {
-      assert(Blocks.cutPartitions(df) === 4)
-    }
-  }
-
   test("a LogicalRelation reporting defaultSizeInBytes counts as unknown size") {
     // a non-file relation (JDBC-like) that does not override sizeInBytes
     // reports the session's defaultSizeInBytes (Long.MaxValue): the cut
@@ -146,17 +115,33 @@ class PinnedCutSpec extends AnyFunSuite {
       s"expected fallback to session shuffle partitions, got $n")
   }
 
-  test("a malformed spark.graft.cut.pin reads as the default and still pins") {
-    withConf("spark.graft.cut.pin" -> "no") {
-      val cut = Blocks.pinnedCut(src.repartition(col("k")))
-      cut.queryExecution.analyzed match {
-        case l: LogicalRDD =>
-          assert(l.outputPartitioning.isInstanceOf[HashPartitioning],
-            s"malformed pin must keep the default, got ${l.outputPartitioning}")
-        case other => fail(s"not a LogicalRDD: $other")
-      }
-      Blocks.release(cut)
-    }
+  test("a keyed cut never changes the conf a query on another thread plans under") {
+    // one thread runs 20 keyed cuts while a second polls the two confs a
+    // cut's own exchange could be tempted to flip and plans a query
+    // against them: the poller must never see either value move, and
+    // every plan it makes meanwhile must stay adaptive
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val spKey = "spark.sql.shuffle.partitions"
+    val before = (spark.conf.get(aqeKey), spark.conf.get(spKey))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Boolean)]()
+    @volatile var cutting = true
+    val poller = new Thread(() =>
+      while (cutting) {
+        val conf = (spark.conf.get(aqeKey), spark.conf.get(spKey))
+        val plan = spark.range(100).groupBy((col("id") % 7).as("g")).count()
+          .queryExecution.executedPlan
+        seen.add((conf._1, conf._2,
+          plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]))
+      })
+    poller.start()
+    try (1 to 20).foreach(_ => Blocks.release(Blocks.cut(src, "k")))
+    finally { cutting = false; poller.join() }
+    import scala.jdk.CollectionConverters._
+    val polls = seen.asScala.toSeq
+    assert(polls.nonEmpty, "the poller never ran")
+    val moved = polls.filter { case (a, p, _) => (a, p) != before }
+    assert(moved.size == 0, s"conf changed under a concurrent query: ${moved.take(3)}")
+    assert(polls.forall(_._3), s"${polls.count(!_._3)} of ${polls.size} plans were not adaptive")
   }
 
   private def probeHint(df: DataFrame): String =
