@@ -57,27 +57,36 @@ private[graft] object Blocks {
     * declaration and pays for the shuffle, so it takes a plain
     * `localCheckpoint()`.
     *
-    * Mechanism: the cut materializes `df.repartition(n, keys)` under the
+    * Mechanism: the cut takes its width `n` from [[cutPartitions]] on
+    * `df`, then materializes `shape(df.repartition(n, keys))` under the
     * session's own conf. That is a REPARTITION_BY_NUM exchange, which
-    * AQE never coalesces, and which `EnsureRequirements` drops when its
-    * input is already `HashPartitioning(keys, n)`. A checkpoint taken
-    * under AQE captures an adaptive plan whose partitioning reads as
-    * unknown, so the cut re-wraps the checkpoint's `LogicalRDD` with the
+    * AQE never coalesces. A checkpoint taken under AQE captures an
+    * adaptive plan whose partitioning reads as unknown, so the cut
+    * re-wraps the checkpoint's `LogicalRDD` with the
     * `HashPartitioning(keys, n)` it was written with, keeping the
-    * checkpoint's stats and constraints. The width `n` is
-    * [[cutPartitions]]. Results are identical to a plain checkpoint;
-    * only plan shape and partition counts change. */
-  def cut(df: DataFrame, keys: String*): DataFrame = cut(df, cutPartitions(df), keys)
+    * checkpoint's stats and constraints. Results are identical to a
+    * plain checkpoint; only plan shape and partition counts change.
+    *
+    * `shape` is the frame's last operator when that operator shuffles on
+    * the keys itself: a `distinct`, a `dropDuplicates` or `groupBy` whose
+    * columns include every key, or a window partitioned by the keys. It
+    * runs above the cut's exchange, which already satisfies its
+    * distribution, so the whole frame costs one shuffle where
+    * `cut(shape(df), keys)` costs two. The shaped frame must keep the
+    * key columns under their names and must not re-shuffle; no caller
+    * sizes a cut. */
+  def cut(df: DataFrame, keys: String*): DataFrame = cut(df, keys)(identity)
 
-  /** [[cut]] at an explicit width. A frame whose last operator shuffles
-    * on the keys itself (a dedup, window or aggregate) takes
-    * `repartition(n, keys)` beneath that operator, with `n` from
-    * [[cutPartitions]], and passes the same `n` here: the cut's own
-    * exchange then folds into that one instead of adding a second. */
-  private[graft] def cut(df: DataFrame, n: Int, keys: Seq[String]): DataFrame = {
+  /** [[cut]] with a `shape` step that runs inside the cut's exchange. */
+  def cut(df: DataFrame, keys: Seq[String])(shape: DataFrame => DataFrame): DataFrame =
+    cut(df, cutPartitions(df), keys, shape)
+
+  /** [[cut]] at an explicit width: the one path every keyed cut takes. */
+  private[graft] def cut(df: DataFrame, n: Int, keys: Seq[String],
+                         shape: DataFrame => DataFrame = identity): DataFrame = {
     require(keys.nonEmpty, "a keyed cut needs at least one key")
     val spark = df.sparkSession
-    val l = df.repartition(n, keys.map(col): _*).localCheckpoint()
+    val l = shape(df.repartition(n, keys.map(col): _*)).localCheckpoint()
       .queryExecution.analyzed.asInstanceOf[LogicalRDD]
     val resolver = spark.sessionState.conf.resolver
     val keyAttrs = keys.map(k => l.output.find(a => resolver(a.name, k)).get)

@@ -192,15 +192,26 @@ object Citations {
 
   /** Both orientations of the non-loop edges, deduped, as a keyed cut on
     * `u`, the key the undirected loops (lpa, mis, louvain) join and group
-    * on. The cut's width is taken up front, so the dedup runs inside the
-    * cut's own exchange: one shuffle, at the cut's width. */
+    * on. The dedup is the cut's shape step, so it runs inside the cut's
+    * own exchange: one shuffle. */
   private def undirectedByU(edges: DataFrame): DataFrame = {
     val e = edges.where(col("src") =!= col("dst"))
     val both = e.select(col("src").as("u"), col("dst").as("v"))
       .union(e.select(col("dst").as("u"), col("src").as("v")))
-    val n = Blocks.cutPartitions(both)
-    Blocks.cut(both.repartition(n, col("u")).distinct(), n, Seq("u"))
+    Blocks.cut(both, Seq("u"))(_.distinct())
   }
+
+  /** The non-loop edges, deduped, as a keyed cut on `src`, the key the
+    * directed loops (hyperball, scc_all, bfs_paths, betweenness,
+    * closeness, node2vec) join on: the directed twin of
+    * [[undirectedByU]], one shuffle for the dedup and the cut. */
+  private def directedBySrc(edges: DataFrame): DataFrame =
+    Blocks.cut(edges.where(col("src") =!= col("dst")), Seq("src"))(_.distinct())
+
+  /** The node set of an edge frame: every `src` and `dst`, deduped, as
+    * `id`. */
+  private def nodeIds(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
 
   /** The canonical undirected edge set (a < b, deduped, self-loops
     * dropped), cut once with an eager plain checkpoint: every consumer
@@ -340,10 +351,8 @@ object Citations {
     * frame; the caller owns its release. */
   private def hyperBallLoop(edges: DataFrame, hops: Int, lgK: Int)
       (perHop: (Int, DataFrame) => Unit): DataFrame = {
-    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-    val balls0 = nodes.groupBy(col("id"))
+    val e = directedBySrc(edges)
+    val balls0 = nodeIds(e).groupBy(col("id"))
       .agg(hll_sketch_agg(col("id"), lit(lgK)).as("ball"))
       .localCheckpoint()
     perHop(0, balls0)
@@ -858,8 +867,7 @@ object Citations {
     // exchange is AQE-sized and the measured ground truth says the pin
     // costs ~70% wall here; see OPTIMIZATION_r16.md.
     val e = edges.repartition(col("src")).localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    val nodes = nodeIds(e)
     val n = nodes.count().toDouble
     val outDeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     // the rank frame CARRIES the out-degree, so each round needs only one
@@ -920,8 +928,7 @@ object Citations {
     // plain AQE cut, not Blocks.cut — the pageRank rationale above
     // (measured at sf0.1: pinned 6.85-7.72 s vs 5.05 s for this shape)
     val e = edges.repartition(col("src")).localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    val nodes = nodeIds(e)
     val seeds = counts(e)
       .orderBy(col("citations").desc, col("paper_id").asc).limit(seedK)
       .select(col("paper_id").as("id"), (lit(1.0) / seedK).as("s"))
@@ -1395,23 +1402,19 @@ object Citations {
     val raw = edges.where(col("src") =!= col("dst"))
     // traversal parallelism: every per-round stage inherits the pinned
     // e2 side's width, so the cut's size-aware partition count (bytes /
-    // target, NOT the session shuffle default — Blocks.cutPartitions) is
-    // the scale carrier: ~1 at sf0.1 where per-task overhead dominates
-    // (32-way micro-tasks billed 3+ s/run over 8-way in r14 probes),
-    // thousands at 100 TB
+    // target, NOT the session shuffle default) is the scale carrier:
+    // ~1 at sf0.1 where per-task overhead dominates (32-way micro-tasks
+    // billed 3+ s/run over 8-way in r14 probes), thousands at 100 TB
     // F rows walk src→dst, B rows walk dst→src; one pinned partitioning
     // on the tagged probe key serves both directions every round, and
-    // the (k, t) dedup runs inside that same exchange: the cut's width is
-    // taken up front so its own repartition folds into this one
+    // the (k, t) dedup is the cut's shape step, inside its one exchange
     val tagged = raw
       .select(concat(lit("F:"), col("src")).as("k"),
         concat(lit("F:"), col("dst")).as("t"))
       .unionByName(raw
         .select(concat(lit("B:"), col("dst")).as("k"),
           concat(lit("B:"), col("src")).as("t")))
-    val n = Blocks.cutPartitions(tagged)
-    val e2 = Blocks.cut(tagged.repartition(n, col("k")).dropDuplicates("k", "t"),
-      n, Seq("k"))
+    val e2 = Blocks.cut(tagged, Seq("k"))(_.dropDuplicates("k", "t"))
     // pivot from the F-slice: t = "F:" ∥ dst, so groupBy(t) is the
     // in-degree count and the constant prefix preserves the id tie-order
     val pivot = e2.where(col("k").startsWith("F:"))
@@ -1516,13 +1519,11 @@ object Citations {
     * (power-law corpora are mostly acyclic tendrils), so the expensive
     * closure runs on the small cyclic core. */
   def sccAll(edges: DataFrame, trimRounds: Int = 10, pivotRounds: Int = 2): DataFrame = {
-    // same width rule as sccPivot: the cut sizes its own partition count
-    // from real input bytes (Blocks.cutPartitions) — per-trim-round
-    // stages are overhead-bound at sf0.1, edge-proportional at 100 TB
-    val e0 = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
-    val nodes = e0.select(col("src").as("id"))
-      .unionByName(e0.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
+    // same width rule as sccPivot: the keyed cut sizes itself from real
+    // input bytes — per-trim-round stages are overhead-bound at sf0.1,
+    // edge-proportional at 100 TB
+    val e0 = directedBySrc(edges)
+    val nodes = nodeIds(e0).localCheckpoint()
     // (residual edges, their count, per-SCC (paper_id, scc_id, scc_size))
     val (rem, _, sccFrames) = Fixpoint.converge("sccAll", pivotRounds,
         (e0, e0.count(), List.empty[DataFrame]))(_._2 == 0) {
@@ -1745,8 +1746,8 @@ object Citations {
                     levelRounds: Int = 12,
                     releaseLabels: Boolean = false): DataFrame = {
     // same width rule as sccPivot: condensation frames are ≤ node-sized,
-    // so per-round stages are overhead-bound — the cut sizes its width
-    // from real input bytes (Blocks.cutPartitions)
+    // so per-round stages are overhead-bound — the keyed cut sizes
+    // itself from real input bytes
     val ce = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct()
       .join(labels.select(col("paper_id").as("src"), col("scc_id").as("src_scc")),
         Seq("src"))
@@ -2372,15 +2373,14 @@ object Citations {
     // discipline — randomWalks, PLANS.md r13).
     val lu = labels.select(col("id").as("uid"), col("label").as("cu"))
     val lv = labels.select(col("id").as("vid"), col("label").as("cv"))
-    // the aggregate's exchange on cu is the cut's (width taken up front)
+    // the weight aggregate is the cut's shape step, inside its exchange
     val cross = und
       .join(lu.hint("shuffle_hash"), und("u") === col("uid"))
       .join(lv.hint("shuffle_hash"), und("v") === col("vid"))
       .where(col("cu") =!= col("cv"))
-    val nCw = Blocks.cutPartitions(cross)
-    val cw = Blocks.cut(cross.repartition(nCw, col("cu"))
-      .groupBy(col("cu").as("u"), col("cv").as("v"))
-      .agg(count(lit(1)).as("w")), nCw, Seq("u"))
+      .select(col("cu").as("u"), col("cv").as("v"))
+    val cw = Blocks.cut(cross, Seq("u"))(
+      _.groupBy(col("u"), col("v")).agg(count(lit(1)).as("w")))
     val degW = Blocks.cut(labels.join(deg, Seq("id"))
       .groupBy(col("label").as("id")).agg(sum(col("deg")).as("deg")), "id")
     graft.Blocks.release(und)
@@ -2647,22 +2647,19 @@ object Citations {
     * between O(walk·deg) and O(walk) per step). The ranking itself is
     * one window pass over the deduped edges, paid once. */
   def randomWalks(edges: DataFrame, walks: Int = 2, steps: Int = 4): DataFrame = {
-    val e = edges.where(col("src") =!= col("dst")).distinct()
-    // the window's exchange on src is the cut's: its width is taken up
-    // front so the cut plans no second shuffle
-    val n = Blocks.cutPartitions(e)
-    val nb = Blocks.cut(e.repartition(n, col("src")).select(col("src"), col("dst"),
+    // the dedup and the window are the cut's shape step: both run inside
+    // its one exchange on src
+    val nb = Blocks.cut(edges.where(col("src") =!= col("dst")), Seq("src"))(
+      _.distinct().select(col("src"), col("dst"),
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
           .cast("long").as("rank"),
-        count(lit(1)).over(Window.partitionBy(col("src"))).as("outdeg")), n, Seq("src"))
+        count(lit(1)).over(Window.partitionBy(col("src"))).as("outdeg")))
     // detached cut: degs shares no lineage (or exprIds) with nb, so the
     // per-step double-reference (degs for the rank pick, nb for the hop)
     // never trips the self-join ambiguity check
     val degs = nb.select(col("src").as("dsrc"), col("outdeg").as("ddeg"))
       .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val state0 = nodes.select(col("id").as("start"),
+    val state0 = nodeIds(nb).select(col("id").as("start"),
         explode(expr(s"sequence(0, ${walks - 1})")).as("wid"))
       .withColumn("cur", col("start"))
       .localCheckpoint()
@@ -2769,8 +2766,7 @@ object Citations {
     * is never built — the bias resolves per step from the adjacency
     * probe. Sinks truncate walks exactly as [[randomWalks]]. */
   def node2vecWalks(edges: DataFrame, walks: Int = 2, steps: Int = 4): DataFrame = {
-    val e = edges.where(col("src") =!= col("dst")).distinct()
-    val nb = Blocks.cut(e.select(col("src"), col("dst")), "src")
+    val nb = directedBySrc(edges)
     // detached re-aliased cut for the triangle probe (the randomWalks
     // degs discipline — no shared exprIds with nb)
     val adj = Blocks.cut(nb.select(col("src").as("asrc"), col("dst").as("adst")), "asrc")
@@ -2779,10 +2775,8 @@ object Citations {
     val ranked = Blocks.cut(nb.select(col("src"), col("dst"),
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
           .cast("long").as("rank")), "src")
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
     // step 1: uniform (no prev) — the randomWalks rule
-    val state0 = nodes.select(col("id").as("start"),
+    val state0 = nodeIds(nb).select(col("id").as("start"),
         explode(expr(s"sequence(0, ${walks - 1})")).as("wid"))
       .withColumn("cur", col("start"))
       .localCheckpoint()
@@ -2948,7 +2942,7 @@ object Citations {
     * everything is exact integer arithmetic, so the query hash-oracles
     * with the identically-unrolled twin. */
   def bfsPaths(edges: DataFrame, hops: Int = 4): DataFrame = {
-    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
+    val e = directedBySrc(edges)
     val out = bfsPathsFrom(e, hops)
     graft.Blocks.release(e)
     out
@@ -3004,7 +2998,7 @@ object Citations {
     * engines therefore run the identical rounded recurrence and the
     * hash verifies every δ exactly. */
   def betweenness(edges: DataFrame, hops: Int = 4): DataFrame = {
-    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
+    val e = directedBySrc(edges)
     // a projection over bfsPathsFrom's own checkpoint, which the
     // returned frame reads
     val fwd = bfsPathsFrom(e, hops)
@@ -3117,7 +3111,7 @@ object Citations {
     * double adds on the 6-dp grid), so the twin hash-matches without
     * decimal accumulation. */
   def closeness(edges: DataFrame, hops: Int = 4, nSeeds: Int = 8): DataFrame = {
-    val e = Blocks.cut(edges.where(col("src") =!= col("dst")).distinct(), "src")
+    val e = directedBySrc(edges)
     val seeds = counts(e)
       .orderBy(col("citations").desc, col("paper_id").asc).limit(nSeeds)
       .select(col("paper_id").as("seed"))
@@ -3332,12 +3326,10 @@ object Citations {
         greatest(col("src"), col("dst")).as("b"),
         when(col("src") < col("dst"), 1).otherwise(0).as("f"),
         when(col("src") > col("dst"), 1).otherwise(0).as("r"))
-    // the pair aggregate's exchange is the cut's: its width is taken up
-    // front so the cut plans no second shuffle
-    val n = Blocks.cutPartitions(pairs)
-    motifCensusFromStates(Blocks.cut(pairs.repartition(n, col("a"), col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg((max(col("f")) + lit(2) * max(col("r"))).as("st")), n, Seq("a", "b")))
+    // the pair aggregate is the cut's shape step, inside its one exchange
+    motifCensusFromStates(Blocks.cut(pairs, Seq("a", "b"))(
+      _.groupBy(col("a"), col("b"))
+        .agg((max(col("f")) + lit(2) * max(col("r"))).as("st"))))
   }
 
   /** The census over the [[graft.streaming.GraphStreams.pairViewStream]]

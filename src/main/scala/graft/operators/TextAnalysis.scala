@@ -378,18 +378,20 @@ object TextAnalysis {
     val spark = s
     import spark.implicits._
     val words = bpeWords(s, d)
-    var vocab = words
+    val vocab0 = words
       .select(expr(
         """array_join(transform(sequence(1, length(w)), i ->
           |  concat('{', substring(w, i, 1), '}')), '')""".stripMargin).as("rep"),
         col("freq"))
       .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long, Long)]()
-    var done = false
     val symsOf = expr(
       """transform(filter(split(rep, '\\}'), x -> x != ''),
         |          x -> substring(x, 2, length(x)))""".stripMargin)
-    for (r <- 1 to rounds if !done) {
+    type Merges = Vector[(Int, String, String, Long, Long)]
+    // (vocabulary, merges so far, no pair left)
+    val (vocab, merges, _) = Fixpoint.rounds(rounds, (vocab0, Vector.empty: Merges, false),
+        until = (st: (DataFrame, Merges, Boolean)) => st._3) { case (r, (vocab, merges, _)) =>
+      // step-local: read by both aggregates, released once the argmax is in
       val framed = vocab.select(col("freq"), symsOf.as("syms")).localCheckpoint()
       val symCounts = framed
         .select(col("freq"), explode(col("syms")).as("s"))
@@ -414,18 +416,13 @@ object TextAnalysis {
         .limit(1)
         .as[(String, String, Long, Long)].collect()
       graft.Blocks.release(framed)
-      if (best.isEmpty) done = true
+      if (best.isEmpty) (vocab, merges, true)
       else {
         val (a, b, nab, score) = best.head
         require(!(a + b).exists(c => c == '{' || c == '}' || c == '\''),
           s"corpus token contains a delimiter/quote: '$a' '$b'")
-        merges += ((r, a, b, nab, score))
-        val next = vocab
-          .select(expr(s"replace(rep, '{$a}{$b}', '{$a$b}')").as("rep"),
-            col("freq"))
-          .localCheckpoint()
-        graft.Blocks.release(vocab)
-        vocab = next
+        (r.cut(vocab.select(expr(s"replace(rep, '{$a}{$b}', '{$a$b}')").as("rep"),
+          col("freq"))), merges :+ ((r.i, a, b, nab, score)), false)
       }
     }
     graft.Blocks.release(vocab)

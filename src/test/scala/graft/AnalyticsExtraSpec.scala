@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, sum => fsum}
+import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 
 import graft.operators.{Citations, EventAnalytics, Pipeline, Profiling, TextAnalysis}
 
@@ -265,6 +267,64 @@ class AnalyticsExtraSpec extends AnyFunSuite {
         assert(rowsAtWidth(q, w) === base, s"$q differs at shuffle.partitions=$w")
       }
     }
+
+  // The same invariance with each keyed cut's own width moving. Over an
+  // edge relation that reports no size, Blocks.cutPartitions falls back to
+  // shuffle.partitions, so widths 1, 4 and 8 re-width the set-up cut
+  // itself (at sf0.001 a sized cut sits at its floor of 4 whatever the
+  // session says).
+  private lazy val edgeRows = Citations.edges(spark, sf).collect().toSeq
+
+  private def atCutWidth[A](width: Int)(body: DataFrame => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, width.toString)
+    try {
+      val rel = new BaseRelation with TableScan {
+        override def sqlContext = spark.sqlContext
+        override def schema = Citations.edges(spark, sf).schema
+        override def buildScan() = spark.sparkContext.parallelize(edgeRows, 4)
+      }
+      val e = spark.baseRelationToDataFrame(rel)
+      assert(Blocks.cutPartitions(e) === width, "the unsized edge frame did not take the session width")
+      body(e)
+    } finally spark.conf.set(key, prev)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(df.col): _*).collect().map(_.toString).sorted.toSeq
+
+  for ((q, op) <- Seq[(String, DataFrame => DataFrame)](
+         "citation_bfs_paths" -> (Citations.bfsPaths(_)),
+         "citation_closeness" -> (Citations.closeness(_)),
+         "citation_random_walks" -> (Citations.randomWalks(_)),
+         "citation_node2vec" -> (Citations.node2vecWalks(_)),
+         "citation_motifs" -> (Citations.motifCensus(_)),
+         "citation_lpa" -> (Citations.lpa(_))))
+    test(s"$q: identical rows at keyed-cut widths 1/4/8 over an unsized edge relation") {
+      val base = atCutWidth(1)(e => sortedRows(op(e)))
+      assert(base.nonEmpty, s"$q returned no rows at sf0.001")
+      Seq(4, 8).foreach { w =>
+        assert(atCutWidth(w)(e => sortedRows(op(e))) === base, s"$q differs at cut width $w")
+      }
+    }
+
+  test("citation_hyperball: estimates within 1.6% at keyed-cut widths 1/4/8 over an unsized edge relation") {
+    // 1.6% is the HLL relative standard error at lgK = 12; every node's
+    // estimate is compared, not only the top 30
+    def estimates(width: Int): Map[String, Long] = atCutWidth(width) { e =>
+      Citations.hyperBall(e, k = Int.MaxValue).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    val base = estimates(1)
+    assert(base.nonEmpty, "citation_hyperball returned no rows at sf0.001")
+    Seq(4, 8).foreach { w =>
+      val got = estimates(w)
+      assert(got.keySet === base.keySet, s"hyperball node set differs at cut width $w")
+      val worst = base.map { case (id, b) => math.abs(got(id) - b).toDouble / b }.max
+      assert(worst <= 0.016, s"hyperball estimate off by ${worst * 100}% at cut width $w")
+    }
+  }
 
   test("events_transitions: transition total equals sessionize's sum(n_events - 1)") {
     // every transition is one consecutive-within-session pair, so the

@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint, SHUFFLE_HASH}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
@@ -15,8 +21,8 @@ import graft.operators.Citations
   * (a) declare its hash partitioning on the keys downstream, (b) derive
   * its partition count from real leaf bytes / target with the floor
   * clamp, (c) remove the downstream exchange on the key, (d) never
-  * change results, and (e) never touch the session conf another query
-  * plans under — plus the size parsing the cut and
+  * change results, (e) never touch the session conf another query
+  * plans under, and (f) run a shape step inside its one exchange — plus the size parsing the cut and
   * [[Citations.probeSide]] share: byte confs honor sign and unit, and
   * unknown sizes never read as huge. */
 class PinnedCutSpec extends AnyFunSuite {
@@ -143,6 +149,73 @@ class PinnedCutSpec extends AnyFunSuite {
     assert(moved.size == 0, s"conf changed under a concurrent query: ${moved.take(3)}")
     assert(polls.forall(_._3), s"${polls.count(!_._3)} of ${polls.size} plans were not adaptive")
   }
+
+  /** `body`'s result and the number of its stages that wrote shuffle
+    * bytes, counted by a listener. The listener bus is asynchronous, so
+    * the count is read once every job it saw start has ended and no new
+    * event has arrived for 300 ms. */
+  private def shufflesWritten[A](body: => A): (A, Int) = {
+    val started, ended, written = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = started.incrementAndGet()
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
+          written.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      val deadline = System.nanoTime() + 10000000000L
+      var last = (-1, -1, -1)
+      var stableMs = 0
+      while (stableMs < 300 && System.nanoTime() < deadline) {
+        Thread.sleep(50)
+        val now = (started.get, ended.get, written.get)
+        if (now == last && now._1 > 0 && now._1 == now._2) stableMs += 50
+        else { stableMs = 0; last = now }
+      }
+      assert(stableMs >= 300, s"listener events still arriving after 10 s: $last")
+      (a, written.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+
+  // a shape step that shuffles on the cut's keys runs inside the cut's one
+  // exchange; the duplicated source gives the dedup shapes work to do
+  private val shapes = Seq[(String, DataFrame => DataFrame)](
+    "distinct" -> (_.distinct()),
+    "dropDuplicates" -> (_.dropDuplicates("k", "v")),
+    "groupBy" -> (_.groupBy(col("k")).agg(sum(col("v")).as("s"), count(lit(1)).as("c"))),
+    "window" -> (_.select(col("k"), col("v"),
+      row_number().over(Window.partitionBy(col("k")).orderBy(col("v"))).as("rn"))))
+
+  for ((name, shape) <- shapes)
+    test(s"shaped cut ($name): one shuffle, declared HashPartitioning(keys, n), same rows") {
+      val df = src.union(src)
+      val n = Blocks.cutPartitions(df)
+      // a session width unlike the cut's, so a shape that ran above its
+      // own exchange could not pass for one that runs inside the cut's
+      val (cut, shuffles) = withConf("spark.sql.shuffle.partitions" -> "3") {
+        shufflesWritten(Blocks.cut(df, Seq("k"))(shape))
+      }
+      assert(shuffles == 1, s"$name: the shaped cut wrote $shuffles shuffles")
+      cut.queryExecution.analyzed match {
+        case l: LogicalRDD => l.outputPartitioning match {
+          case HashPartitioning(exprs, m) =>
+            assert(exprs.map(_.asInstanceOf[Attribute].name) == Seq("k") && m == n,
+              s"$name: declared ${l.outputPartitioning}, expected hash(k) at $n")
+          case other => fail(s"$name: expected HashPartitioning, got $other")
+        }
+        case other => fail(s"$name: the cut is not a LogicalRDD: $other")
+      }
+      val twoStep = Blocks.cut(shape(df), "k")
+      assert(sortedRows(cut) === sortedRows(twoStep), s"$name: rows differ")
+      Blocks.release(cut)
+      Blocks.release(twoStep)
+    }
 
   private def probeHint(df: DataFrame): String =
     df.queryExecution.analyzed.collectFirst {
