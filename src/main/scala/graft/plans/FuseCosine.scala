@@ -31,7 +31,9 @@ import graft.functions.CosineSimilarity
   * norm aggregates must run over the SAME child expressions as the dot
   * (semantic equality), and the element type must be FLOAT (the kernel
   * reads floats; a double-array cosine is left untouched). Disabled by
-  * setting `spark.graft.fuse_cosine=false`.
+  * setting `spark.graft.fuse_cosine=false` (any case); every other value,
+  * a malformed one included, leaves the rule on rather than failing the
+  * optimizer and with it every query of the session.
   */
 object FuseCosine extends Rule[LogicalPlan] {
 
@@ -72,7 +74,7 @@ object FuseCosine extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(ConfKey, "true").toBoolean) plan
+    if (conf.getConfString(ConfKey, "true").equalsIgnoreCase("false")) plan
     else plan.transformAllExpressions {
       case d @ Divide(dab, Multiply(Sqrt(daa), Sqrt(dbb), _), _) =>
         (asDot(dab), asDot(daa), asDot(dbb)) match {

@@ -85,6 +85,43 @@ object CitationProps extends Properties("Citations") {
         .as[(String, String)].collect().toList
       got.sorted == expected.sorted
     }
+
+  // The reader's exact rule, pinned where Java's `trim` (which also strips
+  // tabs) cannot: padded and empty fields, lone tabs, a `#` behind leading
+  // spaces, NBSP / full-width-space padding and non-ASCII ids. The oracle
+  // mirrors perfbench/gen.py:expected_report — drop raw `#` lines, strip
+  // ASCII spaces only, keep lines that split into exactly two fields.
+  private val rawIdGen: Gen[String] = Gen.frequency(
+    4 -> idGen,
+    1 -> Gen.const(""),
+    1 -> Gen.oneOf("\u00e9t\u00e9", "\u4e2d\u6587", "\u00a0" + "7",
+      "8" + "\u3000", "\u00a0"))
+  private val fieldGen: Gen[String] = for {
+    pre <- Gen.oneOf("", " ", "  ")
+    id <- rawIdGen
+    post <- Gen.oneOf("", " ", "  ")
+  } yield pre + id + post
+  private val rawLineGen: Gen[String] = Gen.frequency(
+    6 -> Gen.listOfN(2, fieldGen).map(_.mkString("\t")),
+    2 -> Gen.listOfN(3, fieldGen).map(_.mkString("\t")),
+    1 -> fieldGen,
+    1 -> Gen.oneOf("\t", "\t\t", "a\t", "\tb", "a\tb\t", "\ta\tb", "  #x\ty",
+      "#\tz", " ", ""))
+
+  property("reader keeps exactly the lines of two fields after a space-only trim") =
+    forAll(Gen.listOf(rawLineGen).map(_.take(300))) { lines =>
+      import spark.implicits._
+      def stripSpaces(l: String) = l.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+      val expected = lines
+        .filter(l => !l.startsWith("#"))
+        .map(l => stripSpaces(l).split("\t", -1))
+        .filter(_.length == 2)
+        .map(f => (f(0), f(1)))
+      val got = EdgeListReader.parse(lines.toDF("value"))
+        .as[(String, String)].collect().toList
+      got.sorted == expected.sorted
+    }
+
   // k-truss: random multigraphs (dups/self-loops forced by the small
   // alphabet) against an in-memory common-neighbor peel — soundness,
   // maximality, and per-edge supports all pinned by set equality with

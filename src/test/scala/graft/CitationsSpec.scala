@@ -108,6 +108,18 @@ class CitationsSpec extends AnyFunSuite {
     badRows.foreach { case (raw, _) =>
       assert(!raw.startsWith("#") && raw.trim.nonEmpty)
     }
+    // literal lines: a 1-field and a 3-field line are quarantined with
+    // their field counts; good and bad together are exactly the lines that
+    // are neither comments nor blank after trimming spaces
+    val lines = Seq("# c", "", "   ", "a\tb", " a \t b ", "\t", "  #x\ty",
+      "solo", "a\tb\t1", "\ta\tb", "\t\t")
+    val (g, b) = EdgeListReader.parseWithQuarantine(lines.toDF("value"))
+    assert(b.as[(String, Int)].collect().toSet === Set(
+      ("solo", 1), ("a\tb\t1", 3), ("\ta\tb", 3), ("\t\t", 3)))
+    assert(g.as[(String, String)].collect().toSet ===
+      Set(("a", "b"), ("a ", " b"), ("", ""), ("#x", "y")))
+    assert(g.count() + b.count() ===
+      lines.count(l => !l.startsWith("#") && l.exists(_ != ' ')))
   }
 
   test("showTop30 prints the ranked table to the console (O16)") {
@@ -139,6 +151,50 @@ class CitationsSpec extends AnyFunSuite {
         "\n" + "-" * 31 + "\n" +
         "Generated on: 2026-01-01 00:00:00\n"
     assert(got === expected)
+  }
+
+  test("CitationReportApp report bytes do not depend on split or shuffle width") {
+    // a multi-KB edge file: at maxPartitionBytes=256 it is read as ~20
+    // splits whose boundaries fall inside lines, and each such line must be
+    // read by exactly one split
+    val dir = java.nio.file.Files.createTempDirectory("graft-width")
+    val input = dir.resolve("edges.txt")
+    val body = (0 until 1000).map { i =>
+      val dst = (i * 7919 % 97) % (1 + i % 13)
+      i % 50 match {
+        case 0 => "# comment line " + i
+        case 1 => ""
+        case 2 => s"  #x$i\t$dst"
+        case 3 => s"$i\t$dst\t1"
+        case 4 => s"  $i \t $dst  "
+        case _ => s"$i\t$dst"
+      }
+    }.mkString("\n")
+    java.nio.file.Files.writeString(input, body + "\n")
+    assert(java.nio.file.Files.size(input) > 4096)
+    def report(confs: (String, String)*): String = {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val out = dir.resolve(s"report_${confs.map(_._2).mkString("_")}.txt")
+        CitationReportApp.run(spark, input.toString, out.toString,
+          "2026-01-01 00:00:00")
+        java.nio.file.Files.readString(out)
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val base = report()
+    assert(base.contains("1     0 "), base) // dst 0 leads: every i%13==0
+    val split = "spark.sql.files.maxPartitionBytes"
+    val shuffle = "spark.sql.shuffle.partitions"
+    assert(spark.read.text(input.toString).rdd.getNumPartitions === 1)
+    spark.conf.set(split, "256")
+    try assert(spark.read.text(input.toString).rdd.getNumPartitions > 10)
+    finally spark.conf.unset(split)
+    assert(report(split -> "256") === base)
+    for (n <- Seq(1, 4, 8)) {
+      assert(report(shuffle -> n.toString) === base, s"shuffle.partitions=$n")
+      assert(report(split -> "256", shuffle -> n.toString) === base,
+        s"maxPartitionBytes=256, shuffle.partitions=$n")
+    }
   }
 
   // ---- motif census: independent brute-force classifier ------------------

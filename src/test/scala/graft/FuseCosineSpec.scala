@@ -21,8 +21,11 @@ class FuseCosineSpec extends AnyFunSuite {
       | * sqrt(aggregate(zip_with(b, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
       |                  CAST(0 AS DOUBLE), (acc, v) -> acc + v)))""".stripMargin
 
-  private def withFusion[A](on: Boolean)(body: => A): A = {
-    spark.conf.set("spark.graft.fuse_cosine", on.toString)
+  private def withFusion[A](on: Boolean)(body: => A): A =
+    withFusionConf(on.toString)(body)
+
+  private def withFusionConf[A](value: String)(body: => A): A = {
+    spark.conf.set("spark.graft.fuse_cosine", value)
     try body finally spark.conf.unset("spark.graft.fuse_cosine")
   }
 
@@ -66,6 +69,21 @@ class FuseCosineSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(plan.contains("aggregate("), s"HOF missing from plan:\n$plan")
       assert(!plan.contains("cosine_sim"), s"fused despite conf off:\n$plan")
+    }
+  }
+
+  test("a malformed spark.graft.fuse_cosine plans through the kernel, not a throw") {
+    // only a case-insensitive "false" turns the rule off; a value that is
+    // not a boolean must not fail the optimizer for every query
+    withFusionConf("nope") {
+      val plan = corpusAB.select(expr(hofCosine).as("c"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("cosine_sim"), s"not fused under a malformed conf:\n$plan")
+    }
+    withFusionConf("FALSE") {
+      val plan = corpusAB.select(expr(hofCosine).as("c"))
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("cosine_sim"), s"fused despite conf FALSE:\n$plan")
     }
   }
 
