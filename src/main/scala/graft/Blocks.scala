@@ -200,7 +200,9 @@ private[graft] object Blocks {
     // whole session (round-8 bench: monotonically growing runs on
     // unchanged plans). One explicit GC here makes the sweep actually
     // mean "clean slate": the dead broadcasts/shuffles get enqueued now
-    // and the (async) cleaner frees them before the next timed run.
+    // and the (async) cleaner frees them before the next timed run. The
+    // build's JVMs run it as a waited-for concurrent cycle, not a full
+    // compaction (-XX:+ExplicitGCInvokesConcurrent, build.sbt).
     System.gc()
   }
 }
