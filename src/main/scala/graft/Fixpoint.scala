@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 import scala.util.DynamicVariable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The per-round lifecycle every iterative operator shares.
@@ -22,6 +22,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    every `every`-th round and on the last one. Rounds between cuts chain
   *    their plans: pageRank trades that re-execution against one job per
   *    round at a cadence of 3;
+  *  - the metrics: a done-predicate reads counts and sums of a round's
+  *    cut, never an action on it. `cut(df, metric, more*)` attaches a
+  *    Spark `Observation` to the plan it checkpoints, so the row of
+  *    aggregates arrives with the cut's own jobs (a separate `count()` on
+  *    the checkpoint is one to two jobs more per round). A round off the
+  *    cut cadence that asks for metrics cuts anyway: only a
+  *    materialization can deliver them;
   *  - the release: after each round the loop releases every checkpoint it
   *    owns that no frame of the new state still reads (its `LogicalRDD` is
   *    not a leaf of any state frame's plan). It owns the direct
@@ -52,11 +59,27 @@ object Fixpoint {
     def cut(df: DataFrame): DataFrame = {
       if (firstCut.isEmpty) firstCut = Some(df)
       if (!cutting) df
-      else {
-        val c = df.localCheckpoint()
-        owned += c
-        c
-      }
+      else checkpoint(df)
+    }
+
+    /** [[cut]] that also aggregates `metric` and `more` over the rows it
+      * checkpoints, in the cut's own jobs, and returns them as one row in
+      * argument order. Always cuts, also off the cut cadence: the row
+      * exists only once the frame has been materialized. */
+    def cut(df: DataFrame, metric: Column, more: Column*): (DataFrame, Row) = {
+      if (firstCut.isEmpty) firstCut = Some(df)
+      val obs = Observation()
+      // positional names: two metrics may print the same expression
+      val named = (metric +: more).zipWithIndex.map { case (m, j) => m.as(s"m$j") }
+      val c = checkpoint(df.observe(obs, named.head, named.tail: _*))
+      val got = obs.get
+      (c, Row.fromSeq(named.indices.map(j => got(s"m$j"))))
+    }
+
+    private def checkpoint(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint()
+      owned += c
+      c
     }
 
     /** Name the frame the observer sees for this round, when it is not the

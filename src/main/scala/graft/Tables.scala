@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver's parquet tables (`TESTDATA.md`).
   *
@@ -12,6 +13,21 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * what the query actually touches. At cluster scale the same code reads a
   * partitioned table root instead of a single file; nothing here assumes
   * single-file inputs.
+  *
+  * A plain `spark.read.parquet` infers the schema from the footers with a
+  * one-task Spark job, on every read. [[load]] infers each table's schema
+  * once per session and passes it to later reads with
+  * `spark.read.schema(...)`, which start no job. The memo is keyed on
+  * everything inference depends on:
+  *  - the qualified path;
+  *  - the number, total length and latest modification time of the files
+  *    under it, so a rewritten table infers again;
+  *  - the session's explicitly set `spark.sql.parquet.*` and
+  *    `spark.sql.legacy.parquet.*` confs, so changing one (say
+  *    `spark.sql.legacy.parquet.nanosAsLong`) infers again.
+  * It holds schemas only (no rows, no RDD, no plan) and lives as long as
+  * its session. Directories the engine writes itself (`Compactor`,
+  * `SkippingIndex`, `FingerprintIndex`) are read without it.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -49,8 +65,54 @@ object Tables {
     fixes.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
   }
 
+  private case class SchemaKey(path: String, files: Long, bytes: Long, modified: Long,
+                               confs: Map[String, String])
+
+  /** Per session, weakly held: a dropped session takes its schemas along. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[SchemaKey, StructType]]()
+
+  /** The memo key of the table at `path`; None when it does not exist, so
+    * the plain read reports the missing path in Spark's own words. */
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val q = fs.makeQualified(p)
+    if (!fs.exists(q)) None
+    else {
+      var (files, bytes, modified) = (0L, 0L, 0L)
+      val it = fs.listFiles(q, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += 1
+        bytes += f.getLen
+        modified = modified.max(f.getModificationTime)
+      }
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }
+      Some(SchemaKey(q.toString, files, bytes, modified, confs))
+    }
+  }
+
+  /** A parquet read that infers `path`'s schema only on a memo miss. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        val memo = schemas.synchronized(schemas.computeIfAbsent(spark,
+          _ => new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()))
+        Option(memo.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            memo.put(key, df.schema)
+            df
+        }
+    }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val raw = readParquet(spark, s"$sfDir/$name.parquet")
     // events.ts is the one column that has shipped as TIMESTAMP(NANOS);
     // the relational date columns were never longs, so an int64 there is
     // a genuine integer and must not be reinterpreted.

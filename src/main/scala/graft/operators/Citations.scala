@@ -182,7 +182,9 @@ object Citations {
     *
     * The wedge count Σ d(d-1)/2 and the triangle count are exact
     * integers, so the derived clustering coefficient 3T/W rounds
-    * identically across engines. */
+    * identically across engines. Both come from ONE global aggregate over
+    * the tagged union of triangle rows and degree rows: one
+    * single-partition exchange, no second degree shuffle, no cross join. */
   /** Shared triangle machinery: the degree table and the
     * closed-triangle row set (u, v1, v2) — one row per triangle,
     * vertices NOT yet exploded. See [[citationTriangles]] for the
@@ -299,10 +301,10 @@ object Citations {
     val e0 = undirected(edges)
     val (e, _, _) = Fixpoint.converge("kTruss", rounds, (e0, e0.count(), false))(_._3) {
       case (r, (e, prevEdges, _)) =>
-        val cut = r.cut(edgeSupport(e)
+        val (cut, m) = r.cut(edgeSupport(e)
           .where(col("support") >= k - 2)
-          .select(col("a"), col("b")))
-        val n = cut.count() // checkpoint scan; = edge-set equality (monotone)
+          .select(col("a"), col("b")), count(lit(1)))
+        val n = m.getLong(0) // = edge-set equality (monotone)
         (cut, n, n == prevEdges)
     }
     edgeSupport(e)
@@ -488,10 +490,17 @@ object Citations {
 
   def citationTriangles(edges: DataFrame): DataFrame = {
     val (deg, tri) = triangleRows(edges)
-    val triCount = tri.agg(count(lit(1)).as("triangles"))
-    val wedgeTotal = deg
-      .agg((sum(col("d") * (col("d") - lit(1))) / lit(2)).cast("long").as("wedges"))
-    triCount.crossJoin(broadcast(wedgeTotal))
+    // one global aggregate for both totals: triangle rows tag `t`, degree
+    // rows carry their wedges d(d-1) in `w`, and each total skips the
+    // other side's nulls (an empty graph reads (0, null, null)). The
+    // not-null test is a no-op on the loop-free edge set; it is the one
+    // the orientation joins infer, so this degree aggregate plans the
+    // same exchange as theirs and AQE reuses it
+    val rows = tri.select(lit(1L).as("t"), lit(null).cast("long").as("w"))
+      .unionAll(deg.where(col("n").isNotNull).select(lit(null).cast("long").as("t"),
+        (col("d") * (col("d") - lit(1))).as("w")))
+    rows.agg(count(col("t")).as("triangles"),
+        (sum(col("w")) / lit(2)).cast("long").as("wedges"))
       .select(col("triangles"), col("wedges"),
         round(lit(3.0) * col("triangles") / col("wedges"), 6).as("clustering"))
   }
@@ -1050,7 +1059,8 @@ object Citations {
     *
     * Each round checkpoints the surviving subgraph's degree table. If no
     * node in it has degree < k, the subgraph is the k-core and that
-    * table IS the answer (the fixpoint costs one `isEmpty` probe, no
+    * table IS the answer (the test is a `count_if(deg < k)` that rides on
+    * the table's cut, [[graft.Fixpoint]]: no job of its own, no
     * confirming peel and no edge counts). Otherwise the round peels: two
     * semi-joins of the edge frame against the qualifying nodes, which
     * are broadcast when the table's block bytes are under the session
@@ -1071,8 +1081,8 @@ object Citations {
     * before the exchange) plus two semi-joins keyed on a node id — every
     * frame linear in surviving edges, nothing quadratic, no local loop
     * over collected data. The edge frame (read by the degree aggregate and the
-    * peel) and the degree table (read by the convergence probe and both
-    * semi-joins) are cut every round — exchange reuse does not fire
+    * peel) and the degree table (read by both semi-joins and returned
+    * at convergence) are cut every round — exchange reuse does not fire
     * across such references, the [[hits]] measurement — and each
     * superseded cut is released immediately (graft.Blocks). */
   def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 8): DataFrame = {
@@ -1081,10 +1091,11 @@ object Citations {
     // the cap is `rounds` peels plus the round that confirms the core
     val (deg, _) = Fixpoint.converge("kCore", rounds + 1, (undirected(edges), false))(_._2) {
       case (r, (e, _)) =>
-        val deg = r.cut(e.select(col("a").as("node"))
+        val (deg, m) = r.cut(e.select(col("a").as("node"))
           .unionAll(e.select(col("b").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg")))
-        if (deg.where(col("deg") < k).isEmpty) (deg, true)
+          .groupBy(col("node")).agg(count(lit(1)).as("deg")),
+          count_if(col("deg") < k))
+        if (m.getLong(0) == 0) (deg, true)
         else {
           val ok = probeSide(deg.where(col("deg") >= k).select(col("node")),
             graft.Blocks.blockBytes(deg).getOrElse(Long.MaxValue))
@@ -1312,11 +1323,10 @@ object Citations {
       case (r, (labels, _)) =>
         val msg = und.join(labels.hint("shuffle_hash"), und("u") === labels("id"))
           .groupBy(und("v").as("id")).agg(min(col("label")).as("ml"))
-        val cut = r.cut(labels.join(msg, Seq("id"))
+        val (cut, m) = r.cut(labels.join(msg, Seq("id"))
           .select(col("id"), least(col("label"), col("ml")).as("label"),
-            (col("ml") < col("label")).as("chg")))
-        // the chg-pruning projection; the checkpoint scan needs no join
-        (cut.select(col("id"), col("label")), cut.where(col("chg")).count() == 0)
+            (col("ml") < col("label")).as("chg")), count_if(col("chg")))
+        (cut.select(col("id"), col("label")), m.getLong(0) == 0)
     }
     graft.Blocks.release(und) // the returned frame reads only the final cut
     labels.select(col("id").as("paper_id"), col("label").as("component"))
@@ -1437,10 +1447,10 @@ object Citations {
           .select(col("t").as("id")).distinct()
         val h2 = e2.join(h1.hint("shuffle_hash"), e2("k") === h1("id"))
           .select(col("t").as("id"))
-        val cutN = r.cut(h1.unionByName(h2).distinct()
-          .join(visited, Seq("id"), "left_anti"))
+        val (cutN, m) = r.cut(h1.unionByName(h2).distinct()
+          .join(visited, Seq("id"), "left_anti"), count(lit(1)))
         // an empty frontier is the fixpoint: its cut is dropped, the state kept
-        if (cutN.count() == 0) (visited, frontier, true)
+        if (m.getLong(0) == 0) (visited, frontier, true)
         else (r.cut(visited.union(cutN)), cutN, false)
     }
     val fwd = visited.where(col("id").startsWith("F:"))
@@ -1533,11 +1543,11 @@ object Citations {
             (rem, edgesLeft, false))(_._3) { case (t, (e, prev, _)) =>
           val keep = e.select(col("src").as("n")).distinct()
             .join(e.select(col("dst").as("n")).distinct(), Seq("n"), "left_semi")
-          val cut = t.cut(e
+          val (cut, m) = t.cut(e
             .join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
             .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst")))
-          val n = cut.count()
+            .select(col("src"), col("dst")), count(lit(1)))
+          val n = m.getLong(0)
           (cut, n, n == prev)
         }
         if (left == 0) (e, 0L, found) // the residual is acyclic: singletons
@@ -1545,11 +1555,11 @@ object Citations {
           val s = sccPivot(e) // checkpointed member frame (paper_id)
           val meta = s.agg(min(col("paper_id")).as("scc_id"),
             count(lit(1)).as("scc_size"))
-          val remNxt = r.cut(e
+          val (remNxt, m) = r.cut(e
             .join(s.select(col("paper_id").as("src")), Seq("src"), "left_anti")
             .join(s.select(col("paper_id").as("dst")), Seq("dst"), "left_anti")
-            .select(col("src"), col("dst")))
-          (remNxt, remNxt.count(), s.crossJoin(broadcast(meta)) :: found)
+            .select(col("src"), col("dst")), count(lit(1)))
+          (remNxt, m.getLong(0), s.crossJoin(broadcast(meta)) :: found)
         }
     }
     val members = sccFrames.map(_.select(col("paper_id")))
@@ -1768,12 +1778,12 @@ object Citations {
           ce("src_scc") === levels("scc_id"))
         .select(col("dst_scc").as("scc_id"), (col("level") + 1).as("lvl"))
         .groupBy(col("scc_id")).agg(max(col("lvl")).as("lvl"))
-      val cut = r.cut(levels.select(col("scc_id"), col("level"))
+      val (cut, m) = r.cut(levels.select(col("scc_id"), col("level"))
         .join(cand, Seq("scc_id"), "left_outer")
         .select(col("scc_id"),
-          greatest(col("level"), coalesce(col("lvl"), lit(0L))).as("level")))
-      val s = cut.agg(coalesce(sum(col("level")), lit(0L)))
-        .collect()(0).getLong(0)
+          greatest(col("level"), coalesce(col("lvl"), lit(0L))).as("level")),
+        coalesce(sum(col("level")), lit(0L)))
+      val s = m.getLong(0)
       (cut, s, s == prevSum)
     }
     val out = sccs.join(levels, Seq("scc_id"))
@@ -1942,15 +1952,16 @@ object Citations {
     val alive0 = Blocks.cut(e0.select(col("u").as("id")).distinct(), "id")
     // the LCG priority hashes THROUGH a BIGINT cast; a non-numeric id
     // would cast to NULL and null-poison its key, silently starving the
-    // node of wins — fail loudly instead (the count scans blocks the
-    // loop materialized anyway)
-    val nonNumeric = alive0.where(col("id").cast("long").isNull).count()
+    // node of wins — fail loudly instead (one aggregate over the alive
+    // cut gives this and the loop's starting alive count)
+    val a0 = alive0.agg(count(lit(1)), count_if(col("id").cast("long").isNull)).head()
+    val nonNumeric = a0.getLong(1)
     require(nonNumeric == 0,
       s"mis requires numeric node ids ($nonNumeric non-numeric); " +
         "the per-round LCG priority casts ids to BIGINT")
     // (alive nodes, alive-only edges, alive count, each round's decided cut)
     val (alive, e, _, decidedCuts) = Fixpoint.converge("mis", rounds,
-        (alive0, e0, alive0.count(), Vector.empty[DataFrame]))(_._3 == 0) {
+        (alive0, e0, a0.getLong(0), Vector.empty[DataFrame]))(_._3 == 0) {
       case (r, (alive, e, _, decided)) =>
         val i = r.i
         val keyed = alive.select(col("id"), concat(
@@ -1973,12 +1984,12 @@ object Citations {
           .unionAll(out.select(col("id"), lit(false).as("in_mis"),
             lit(i).as("round"))))
         val gone = cut.select(col("id"))
-        val aliveCut = r.cut(alive.join(gone, Seq("id"), "left_anti"))
+        val (aliveCut, m) = r.cut(alive.join(gone, Seq("id"), "left_anti"), count(lit(1)))
         val eCut = r.cut(e
           .join(gone.select(col("id").as("u")), Seq("u"), "left_anti")
           .join(gone.select(col("id").as("v")), Seq("v"), "left_anti")
           .select(col("u"), col("v")))
-        (aliveCut, eCut, aliveCut.count(), decided :+ cut)
+        (aliveCut, eCut, m.getLong(0), decided :+ cut)
     }
     graft.Blocks.release(alive)
     graft.Blocks.release(e)
@@ -2431,7 +2442,11 @@ object Citations {
         // compare the same VARCHAR order.
         .where(col("c") <= col("own"))
         .join(degW, Seq("id"))
-        .join(sigma, Seq("c"))
+        // sigma has at most one row per row of l2, so l2's block bytes
+        // bound it. Left to AQE, the small side was broadcast at run time
+        // either before or after the other side's exchange on `c` had
+        // started, and the round ran 4 or 6 stages by that race
+        .join(probeSide(sigma, graft.Blocks.blockBytes(l2).getOrElse(Long.MaxValue)), Seq("c"))
         .withColumn("totx", col("tot") -
           when(col("c") === col("own"), col("deg")).otherwise(lit(0L)))
         .withColumn("score",

@@ -463,18 +463,22 @@ object Dedup {
     val (labels, _) = Fixpoint.converge("dedupClusters", maxRounds, (labels0, false))(_._2) {
       case (r, (labels, _)) =>
         val msgs = und.join(labels, und("src") === labels("id"))
-          .select(col("dst").as("id"), col("label"))
-        val folded = labels.select(col("id"), col("label")).union(msgs)
-          .groupBy(col("id")).agg(min(col("label")).as("label"))
+          .select(col("dst").as("id"), col("label"), lit(false).as("own"))
+        // the fold keeps each node's own label as `old`, so the cut can
+        // flag a change without joining the previous labels again
+        val folded = labels.select(col("id"), col("label"), lit(true).as("own"))
+          .union(msgs)
+          .groupBy(col("id")).agg(min(col("label")).as("label"),
+            max(when(col("own"), col("label"))).as("old"))
         // shortcut hop: labels are themselves node ids, so one self-join
         // compresses label -> label(label); halves the remaining distance
         // to the component minimum every round
         val byId = folded.select(col("id").as("lid"), col("label").as("l2"))
-        val next = r.cut(folded.join(byId, folded("label") === col("lid"), "left_outer")
-          .select(folded("id"),
-            least(folded("label"), coalesce(col("l2"), folded("label"))).as("label")))
-        (next, next.join(labels.withColumnRenamed("label", "old"), Seq("id"))
-          .where(col("label") =!= col("old")).count() == 0)
+        val label = least(folded("label"), coalesce(col("l2"), folded("label")))
+        val (next, m) = r.cut(folded.join(byId, folded("label") === col("lid"), "left_outer")
+          .select(folded("id"), label.as("label"), (label =!= folded("old")).as("chg")),
+          count_if(col("chg")))
+        (next.select(col("id"), col("label")), m.getLong(0) == 0)
     }
     // the loop's working set (pair frame) is dead once labels converged;
     // `labels` itself stays — the returned join below still reads it

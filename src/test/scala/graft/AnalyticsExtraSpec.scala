@@ -181,8 +181,15 @@ class AnalyticsExtraSpec extends AnyFunSuite {
       ("a", "b"), ("b", "c"), ("c", "a"), ("c", "a"), // dup
       ("c", "d"), ("e", "d") // chain, one edge "reversed"
     ).toDF("src", "dst")
-    val got = Citations.kCore(edges).as[(String, Long)].collect().sorted.toSeq
+    val (got, jobs) = SparkTestBase.jobsOf(
+      Citations.kCore(edges).as[(String, Long)].collect().sorted.toSeq)
     assert(got === Seq(("a", 2L), ("b", 2L), ("c", 2L)))
+    // 2 jobs for the edge-set cut (its dedup's shuffle-map job, then the
+    // checkpoint), 2 for each of the three degree-table cuts, 2 for each
+    // of the two peels (the qualifying nodes' broadcast, then the
+    // checkpoint) and 1 for the collect. The convergence test rides on
+    // the degree cuts: an action per round on them would read more
+    assert(jobs === 13)
     // convergence inside the 8-round cap: one extra round changes nothing
     val more = Citations.kCore(edges, rounds = 9)
       .as[(String, Long)].collect().sorted.toSeq
@@ -394,6 +401,10 @@ class AnalyticsExtraSpec extends AnyFunSuite {
     val got = Citations.citationTriangles(edges)
       .as[(Long, Long, Double)].collect()
     assert(got === Array((4L, 15L, 0.8)))
+    // the empty graph: no triangles, and no wedges to divide by
+    val empty = Citations.citationTriangles(edges.limit(0)).collect()
+    assert(empty.length === 1)
+    assert(empty(0).getLong(0) === 0L && empty(0).isNullAt(1) && empty(0).isNullAt(2))
   }
 
   test("citation_local_clustering: hand fixture — K4 nodes at 1.0, the bridge node at 0.5") {

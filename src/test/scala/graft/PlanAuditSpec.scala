@@ -35,7 +35,8 @@ class PlanAuditSpec extends AnyFunSuite {
     *    events_funnel's 3 stage counts, mix_temperature's Σ n_lang^α,
     *    quality_unigram_logprob's corpus token total, q6's 1-row
     *    global revenue aggregate, layout_zorder's 4-value min-max
-    *    normalization stats, citation_triangles' triangle/wedge counts,
+    *    normalization stats, citation_triangles' one triangle/wedge
+    *    aggregate,
     *    search_bm25's (n_docs, sum_dl) corpus stats,
     *    quality_threshold_filter's 1-row median-ttr aggregate (exact
     *    percentile state bounded by the 6-dp score grid, ≤10^6 entries),
@@ -240,9 +241,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // histogram (≤|distinct degrees| rows each side — the degree_dist
     // bound); the corpus collapsed before any of this
     "citation_rich_club",
-    // citation_triangles: triangle count × wedge total — two 1-row
-    // scalar aggregates folded together for the clustering coefficient
-    "citation_triangles",
     // search_bm25: the 1-row (n_docs, sum_dl) corpus-stats frame folded
     // onto every scored (doc, term) row
     "search_bm25",

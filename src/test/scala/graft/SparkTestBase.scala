@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (getOrCreate dedups). */
@@ -16,5 +19,33 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** `body`'s result and the number of Spark jobs it started, counted by a
+    * listener. The listener bus delivers events in order, so once the
+    * listener sees a marker job submitted after `body`, it has seen every
+    * job `body` started. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val started = new LinkedBlockingQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = started.add(j.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      val marker = sc.submitJob(sc.parallelize(Seq(1), 1), (_: Iterator[Int]) => (),
+        Seq(0), (_: Int, _: Unit) => (), ())
+      marker.get()
+      val markerId = marker.jobIds.head
+      var n = 0
+      var id = started.poll(30, TimeUnit.SECONDS)
+      while (id != null && id != markerId) {
+        n += 1
+        id = started.poll(30, TimeUnit.SECONDS)
+      }
+      assert(id != null, "the listener never saw the marker job")
+      (a, n)
+    } finally sc.removeSparkListener(listener)
   }
 }
