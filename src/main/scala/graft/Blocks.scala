@@ -163,22 +163,24 @@ private[graft] object Blocks {
     * still owns. Async (`blocking = false`): the freeing races nothing —
     * the caller has already materialized the successor. */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case l: LogicalRDD =>
+      pinned.remove(l.rdd.id)
+      l.rdd.unpersist(blocking = false)
     case _ => ()
   }
 
-  /** RDD ids exempt from [[sweepAll]] — model artifacts a per-dataset
-    * cache owns across queries (the SCC labeling: node-sized, one frame
-    * per dataset, the in-session stand-in for the persisted table a
-    * production deployment would reuse). Bounded by construction: only
-    * deliberate model caches pin, and they pin one frame per dataset. */
+  /** RDD ids exempt from [[sweepAll]]: the label frames [[Tables.memo]]
+    * holds across queries (node-sized, the in-session stand-in for the
+    * persisted table a production deployment would reuse). Bounded: the
+    * memo holds one entry per model and dataset per session, and
+    * [[release]]s the frame an entry replaces, which unpins it. */
   private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
   /** Exempt a checkpointed frame's RDD from [[sweepAll]]. No-op for
     * non-checkpoint frames (same conservatism as [[release]]). An
-    * explicit [[release]] still frees a pinned frame — pin only guards
-    * against the harness's between-queries sweep, not the owner's own
-    * lifecycle. */
+    * explicit [[release]] still frees and unpins a pinned frame: pin
+    * only guards against the harness's between-queries sweep, not the
+    * owner's own lifecycle. */
   def pin(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case l: LogicalRDD => pinned.add(l.rdd.id)
     case _ => ()

@@ -1,9 +1,14 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
+
+import scala.annotation.tailrec
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver's parquet tables (`TESTDATA.md`).
   *
@@ -14,20 +19,23 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * partitioned table root instead of a single file; nothing here assumes
   * single-file inputs.
   *
-  * A plain `spark.read.parquet` infers the schema from the footers with a
-  * one-task Spark job, on every read. [[load]] infers each table's schema
-  * once per session and passes it to later reads with
-  * `spark.read.schema(...)`, which start no job. The memo is keyed on
-  * everything inference depends on:
-  *  - the qualified path;
-  *  - the number, total length and latest modification time of the files
-  *    under it, so a rewritten table infers again;
-  *  - the session's explicitly set `spark.sql.parquet.*` and
-  *    `spark.sql.legacy.parquet.*` confs, so changing one (say
-  *    `spark.sql.legacy.parquet.nanosAsLong`) infers again.
-  * It holds schemas only (no rows, no RDD, no plan) and lives as long as
-  * its session. Directories the engine writes itself (`Compactor`,
-  * `SkippingIndex`, `FingerprintIndex`) are read without it.
+  * [[memo]] is the session's one store for work shared across queries:
+  * each table's schema, which [[load]] infers once per session and passes
+  * to later reads with `spark.read.schema(...)` (a plain read infers it
+  * from the footers with a one-task job, every time), and the model fits
+  * (`Citations`' SCC and Louvain labels, `Similarity`'s IVF centroids, PQ
+  * codebooks, PCA and k-means fits). An entry is keyed on the session,
+  * then on the model's name, its parameters and its input table paths,
+  * and stamped with those tables' content: the qualified path and the
+  * number, total length and latest modification time of the files under
+  * each. A call whose stamp differs refits and replaces the entry, so a
+  * table rewritten at the same path refits, and the memo holds one entry
+  * per (model, params, paths) per session. A checkpointed frame a fit
+  * returns is pinned against [[Blocks.sweepAll]] while it is the current
+  * entry, and [[Blocks.release]]d when replaced. Within one session, a
+  * query and its oracle twin read the same fit, bit for bit. Directories
+  * the engine writes itself (`Compactor`, `SkippingIndex`,
+  * `FingerprintIndex`) are read without the memo.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -65,16 +73,10 @@ object Tables {
     fixes.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
   }
 
-  private case class SchemaKey(path: String, files: Long, bytes: Long, modified: Long,
-                               confs: Map[String, String])
+  /** A path's content stamp; None for a path that does not exist. */
+  private case class Content(path: String, files: Long, bytes: Long, modified: Long)
 
-  /** Per session, weakly held: a dropped session takes its schemas along. */
-  private val schemas =
-    new java.util.WeakHashMap[SparkSession, java.util.Map[SchemaKey, StructType]]()
-
-  /** The memo key of the table at `path`; None when it does not exist, so
-    * the plain read reports the missing path in Spark's own words. */
-  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+  private def content(spark: SparkSession, path: String): Option[Content] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val q = fs.makeQualified(p)
@@ -88,39 +90,83 @@ object Tables {
         bytes += f.getLen
         modified = modified.max(f.getModificationTime)
       }
-      val confs = spark.conf.getAll.filter { case (k, _) =>
-        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-      }
-      Some(SchemaKey(q.toString, files, bytes, modified, confs))
+      Some(Content(q.toString, files, bytes, modified))
     }
   }
 
-  /** A parquet read that infers `path`'s schema only on a memo miss. */
-  private def readParquet(spark: SparkSession, path: String): DataFrame =
-    schemaKey(spark, path) match {
-      case None => spark.read.parquet(path)
-      case Some(key) =>
-        val memo = schemas.synchronized(schemas.computeIfAbsent(spark,
-          _ => new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()))
-        Option(memo.get(key)) match {
-          case Some(schema) => spark.read.schema(schema).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            memo.put(key, df.schema)
-            df
-        }
+  private case class Key(model: String, params: Any, paths: Seq[String])
+
+  /** One fit, run once however many callers share it. */
+  private final class Entry(val stamp: Seq[Option[Content]], fit: => Any) {
+    private val task = new FutureTask[Any](() => { val a = fit; frame(a).foreach(Blocks.pin); a })
+
+    def value: Any = {
+      task.run()
+      try task.get() catch { case e: ExecutionException => throw e.getCause }
     }
 
+    def release(): Unit =
+      if (task.isDone) Try(task.get()).toOption.flatMap(frame).foreach(Blocks.release)
+  }
+
+  private def frame(a: Any): Option[DataFrame] = a match {
+    case df: DataFrame @unchecked => Some(df)
+    case _ => None
+  }
+
+  /** Per session, weakly held: a dropped session takes its entries along,
+    * unless one of them (a checkpointed frame) still refers to it. */
+  private val sessions = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Key, Entry]]()
+
+  /** `fit`, computed once per session, `model`, `params` and content of
+    * the tables at `paths` (see above); a fit that throws leaves no entry.
+    * The fit runs outside the map, after its holder is in, so it may use
+    * the memo itself, as every fit that reads a table through [[load]]
+    * does. */
+  def memo[A](spark: SparkSession, model: String, params: Any, paths: Seq[String])(fit: => A): A = {
+    val entries = sessions.synchronized(
+      sessions.computeIfAbsent(spark, _ => new ConcurrentHashMap[Key, Entry]()))
+    val key = Key(model, params, paths)
+    val mine = new Entry(paths.map(content(spark, _)), fit)
+    @tailrec def current(): Entry = entries.putIfAbsent(key, mine) match {
+      case null => mine
+      case e if e.stamp == mine.stamp => e
+      case e if entries.replace(key, e, mine) => e.release(); mine
+      case _ => current()
+    }
+    val e = current()
+    try e.value.asInstanceOf[A]
+    catch { case t: Throwable => entries.remove(key, e); throw t }
+  }
+
+  /** Where table `name` of `sfDir` lives. */
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** A parquet read that infers `path`'s schema only on a memo miss; the
+    * parquet confs are the parameters. A missing path fails in the
+    * inference, with Spark's own error. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    spark.read.schema(memo(spark, "schema", confs, Seq(path))(spark.read.parquet(path).schema))
+      .parquet(path)
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = readParquet(spark, s"$sfDir/$name.parquet")
+    val raw = readParquet(spark, path(sfDir, name))
     // events.ts is the one column that has shipped as TIMESTAMP(NANOS);
     // the relational date columns were never longs, so an int64 there is
     // a genuine integer and must not be reinterpreted.
     canonTimestamps(raw, if (name == "events") Set("ts") else Set.empty)
   }
 
-  /** Register every table as a temp view so `spark.sql` text matches the
-    * DuckDB oracle text where convenient. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+  /** `body` over `df` registered as a temp view named `prefix` plus a
+    * suffix unique to the call, dropped when `body` returns; `spark.sql`
+    * analyses eagerly, so a frame `body` returns keeps the view's plan. */
+  def withView[A](df: DataFrame, prefix: String)(body: String => A): A = {
+    val name = s"${prefix}_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    df.createTempView(name)
+    try body(name) finally df.sparkSession.catalog.dropTempView(name)
+  }
 }

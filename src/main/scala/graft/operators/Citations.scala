@@ -793,20 +793,20 @@ object Citations {
     // pin the edge frame once: every recursion step joins against it, and
     // without the checkpoint each step re-scans the parquet and re-derives
     // the projection (same reasoning as pageRank's static sides)
-    edges(s, d).localCheckpoint()
-      .createOrReplaceTempView("graft_citation_edges")
-    s.sql(
-      """WITH RECURSIVE seeds AS (
-        |  SELECT dst AS id FROM graft_citation_edges
-        |  GROUP BY dst ORDER BY count(*) DESC, dst ASC LIMIT 5),
-        |r(id, hop) AS (
-        |  SELECT id, 0 AS hop FROM seeds
-        |  UNION ALL
-        |  SELECT e.dst, r.hop + 1 FROM r
-        |  JOIN graft_citation_edges e ON e.src = r.id
-        |  WHERE r.hop < 3)
-        |SELECT id AS paper_id, CAST(min(hop) AS INT) AS min_hop
-        |FROM r GROUP BY id""".stripMargin)
+    Tables.withView(edges(s, d).localCheckpoint(), "graft_citation_edges") { e =>
+      s.sql(
+        s"""WITH RECURSIVE seeds AS (
+           |  SELECT dst AS id FROM $e
+           |  GROUP BY dst ORDER BY count(*) DESC, dst ASC LIMIT 5),
+           |r(id, hop) AS (
+           |  SELECT id, 0 AS hop FROM seeds
+           |  UNION ALL
+           |  SELECT e.dst, r.hop + 1 FROM r
+           |  JOIN $e e ON e.src = r.id
+           |  WHERE r.hop < 3)
+           |SELECT id AS paper_id, CAST(min(hop) AS INT) AS min_hop
+           |FROM r GROUP BY id""".stripMargin)
+    }
   }
 
   val citationReachSql: String =
@@ -1656,10 +1656,10 @@ object Citations {
       sccAll(edges, trimRounds, pivotRounds).localCheckpoint())
 
   /** [[sccCondensation]] over a PRE-COMPUTED labeling — the label-frame
-    * overload the per-dataset model cache ([[sccLabelsCached]]) wires
-    * through, so the decomposition is paid once per dataset, not once per
-    * consumer. Bit-identical to the self-labeling form: same labels →
-    * same quotient. */
+    * overload the memoized labels ([[sccLabelsCached]]) wire through, so
+    * the decomposition is paid once per dataset, not once per consumer.
+    * Bit-identical to the self-labeling form: same labels → same
+    * quotient. */
   def sccCondensationFrom(edges: DataFrame, labelsIn: DataFrame): DataFrame = {
     val labels = labelsIn.select(col("paper_id"), col("scc_id"))
     val e = edges.where(col("src") =!= col("dst")).distinct()
@@ -1672,28 +1672,13 @@ object Citations {
       .agg(count(lit(1)).as("n_edges"))
   }
 
-  /** The full SCC labeling as a per-dataset MODEL ARTIFACT (the
-    * [[graft.operators.Similarity]] `centroidCache` precedent): every
-    * cycle-aware consumer — the labeling query itself, the condensation,
-    * the topological layers — needs the identical decomposition, and
-    * before this cache the bench paid it ~3.5× per suite (r12 verdict:
-    * ~59 s, 21% of the total). The labels are node-sized, so unlike the
-    * centroid model they stay DISTRIBUTED: the cache holds one pinned
-    * local checkpoint per (session, dataset) — [[graft.Blocks.pin]]
-    * exempts it from the harness's between-queries sweep — which is the
-    * in-session stand-in for what a production deployment does with the
-    * decomposition of a 100-TB graph: persist it to a table once and let
-    * every downstream query read the table. Reuse is bit-identical by
-    * construction: consumers read the same materialized label rows. */
-  private val sccLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** The full SCC labeling of `d`'s edges, fitted once per session and
+    * table content ([[graft.Tables.memo]]): the labeling query, the
+    * condensation and the topological layers all need the identical
+    * decomposition, and read the same pinned label checkpoint. */
   def sccLabelsCached(s: SparkSession, d: String): DataFrame =
-    sccLabelCache.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
-      val labels = sccAll(edges(s, d)).localCheckpoint()
-      graft.Blocks.pin(labels)
-      labels
-    })
+    Tables.memo(s, "scc_labels", (), Seq(Tables.path(d, "lineitem")))(
+      sccAll(edges(s, d)).localCheckpoint())
 
   /** DuckDB twin of [[sccCondensation]]: the [[sccAllSql]] CTE prefix,
     * then the same two label joins + group. */
@@ -1750,8 +1735,8 @@ object Citations {
       levelRounds, releaseLabels = true)
 
   /** [[sccLayers]] over a PRE-COMPUTED labeling (see
-    * [[sccCondensationFrom]]); `releaseLabels` stays false for cached
-    * label frames — the cache owns their lifecycle, not this consumer. */
+    * [[sccCondensationFrom]]); `releaseLabels` stays false for memoized
+    * label frames — the memo owns their lifecycle, not this consumer. */
   def sccLayersFrom(edges: DataFrame, labels: DataFrame,
                     levelRounds: Int = 12,
                     releaseLabels: Boolean = false): DataFrame = {
@@ -2285,23 +2270,11 @@ object Citations {
     (labels, und, deg)
   }
 
-  /** The louvain labeling as a per-dataset MODEL ARTIFACT — the
-    * [[sccLabelsCached]] discipline verbatim: both louvain consumers
-    * (the labeling query and the stats rollup) need the identical
-    * 4-round sweep, and without the cache the bench pays it twice per
-    * suite. Pinned local checkpoint per (session, dataset); reuse is
-    * bit-identical by construction (consumers read the same
-    * materialized label rows — the production shape is "persist the
-    * partition to a table once, every report reads the table"). */
-  private val louvainLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** The level-1 louvain labeling, shared by the labeling query, the
+    * stats rollup and the multi-level pass like [[sccLabelsCached]]. */
   def louvainLabelsCached(s: SparkSession, d: String): DataFrame =
-    louvainLabelCache.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
-      val labels = louvain(edges(s, d)).localCheckpoint()
-      graft.Blocks.pin(labels)
-      labels
-    })
+    Tables.memo(s, "louvain_labels", (), Seq(Tables.path(d, "lineitem")))(
+      louvain(edges(s, d)).localCheckpoint())
 
   /** [[louvainStats]] over a PRE-COMPUTED labeling (paper_id, community)
     * — the label-frame overload [[louvainLabelsCached]] wires through,
@@ -2323,7 +2296,7 @@ object Citations {
     * modularity from on large graphs, on top of the one-level local-move
     * sweep ([[louvain]]):
     *
-    *   1. level-1 labels from the cached 4-round LPAm sweep;
+    *   1. level-1 labels from the memoized 4-round LPAm sweep;
     *   2. COARSEN: communities become supernodes, parallel edges
     *      collapse to one weighted edge (w = cross-community row count
     *      of the direction-doubled undirected frame — symmetric by
@@ -2475,7 +2448,7 @@ object Citations {
   }
 
   /** Standalone multi-level run (fixture/spec path — the query map goes
-    * through [[louvainLabelsCached]] so level 1 is paid once per suite). */
+    * through [[louvainLabelsCached]] so level 1 is paid once per session). */
   def louvainMl(edges: DataFrame, rounds: Int = 4, rounds2: Int = 4): DataFrame = {
     val l1 = louvain(edges, rounds)
     louvainMlFrom(edges, l1, rounds2)

@@ -201,13 +201,10 @@ object Relational {
 
   /** GROUPING SETS: two independent groupings + grand total in one pass. */
   def aggGroupingSets(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "customer").createOrReplaceTempView("customer")
-    t(s, d, "nation").createOrReplaceTempView("nation")
-    s.sql(
-      """SELECT c_mktsegment, n_name, count(*) AS n,
-        |       round(sum(c_acctbal), 2) AS balance
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY GROUPING SETS ((c_mktsegment), (n_name), ())""".stripMargin)
+    val (seg, name) = (col("c_mktsegment"), col("n_name"))
+    t(s, d, "customer").join(t(s, d, "nation"), col("c_nationkey") === col("n_nationkey"))
+      .groupingSets(Seq(Seq(seg), Seq(name), Seq()), seg, name)
+      .agg(count(lit(1)).as("n"), round(sum(col("c_acctbal")), 2).as("balance"))
   }
 
   val aggGroupingSetsSql: String =

@@ -70,6 +70,11 @@ object Similarity {
   private def emb(s: SparkSession, d: String): DataFrame =
     Tables.load(s, d, "embeddings")
 
+  /** A model fitted over `d`'s embeddings, memoized per session and table
+    * content ([[Tables.memo]]). */
+  private def fitted[A](s: SparkSession, d: String, model: String, params: Any)(fit: => A): A =
+    Tables.memo(s, model, params, Seq(Tables.path(d, "embeddings")))(fit)
+
   /** dot(a, b) in double with sequential fold — the cross-engine-stable
     * formulation. */
   private def dotExpr(a: String, b: String): String =
@@ -201,27 +206,24 @@ object Similarity {
         .select(col("cid"), coalesce(col("mean"), col("prev")).as("ce")))
     }
 
-  /** The trained coarse quantizer is a MODEL ARTIFACT — O(C × dim) floats,
-    * independent of corpus size — so it is trained once per dataset and
-    * reused by every query against it (exactly how an IVF index works in
-    * production: train offline, ship the centroids with the index). The
-    * cache holds the collected vectors, not a plan, so reuse costs one
-    * tiny localized DataFrame build. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Float])]]()
-
+  /** The trained coarse quantizer, O(C × dim) floats whatever the corpus
+    * size, fitted once per session and table content ([[fitted]]) and
+    * reused by every query against it (an IVF index in production: train
+    * offline, ship the centroids with the index). The memo holds the
+    * collected vectors, not a plan, so reuse costs one tiny localized
+    * DataFrame build. */
   private[graft] def trainedCentroidRows(
       s: SparkSession, d: String): Seq[(Long, Seq[Float])] =
-    centroidCache.computeIfAbsent(d, _ => {
+    fitted(s, d, "ivf_centroids", ()) {
       val e = emb(s, d)
-      // one corpus count per dataset (amortized with the training pass)
+      // one corpus count per fit (amortized with the training pass)
       // sizes C — see numCentroids for the √n rationale
       val trained = trainCentroids(e, numCentroids(e.count()))
       val collected = trained.collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      graft.Blocks.release(trained) // model now lives in this cache
+      graft.Blocks.release(trained) // the model now lives in the memo
       collected
-    })
+    }
 
   private[graft] def trainedCentroids(s: SparkSession, d: String): DataFrame = {
     val rows = trainedCentroidRows(s, d)
@@ -273,7 +275,7 @@ object Similarity {
   /** DuckDB twin of [[annIvf]], GENERATED against the dataset's trained
     * coarse quantizer — the [[embeddingPcaProjectSql]] dynamic-twin
     * precedent applied to the ANN family (r13/r14 verdict directive).
-    * The cached centroids fold in as FLOAT[] VALUES literals
+    * The memoized centroids fold in as FLOAT[] VALUES literals
     * (`Float.toString` is shortest-round-trip, so parse→cast lands the
     * identical bits) and DuckDB replays the full IVF DECISION chain:
     * nearest-centroid corpus assignment (argmin on the 6-dp cosine grid,
@@ -529,20 +531,17 @@ object Similarity {
     books
   }
 
-  /** Codebooks are a model artifact like the IVF centroids — O(M × K ×
-    * Sub) floats, trained once per dataset. */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Int, Seq[Float])]]()
-
+  /** Codebooks, O(M × K × Sub) floats, fitted once like the IVF
+    * centroids. */
   private[graft] def trainedCodebookRows(
       s: SparkSession, d: String): Seq[(Int, Int, Seq[Float])] =
-    codebookCache.computeIfAbsent(d, _ => {
+    fitted(s, d, "pq_codebooks", ()) {
       val trained = trainCodebooks(emb(s, d))
       val collected = trained.collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2))).toSeq
-      graft.Blocks.release(trained) // model now lives in this cache
+      graft.Blocks.release(trained) // the model now lives in the memo
       collected
-    })
+    }
 
   private def trainedCodebooks(s: SparkSession, d: String): DataFrame = {
     val rows = trainedCodebookRows(s, d)
@@ -1063,6 +1062,15 @@ object Similarity {
             |  (a, t) -> CAST(a + t AS DECIMAL(28,12))) AS DOUBLE), 9)"""
             .stripMargin).as("err2"))
 
+  /** One fit per session and table content ([[fitted]]): the PROJECTION
+    * QUERY and its generated oracle SQL must consume the IDENTICAL
+    * mean/components, because the fit's Gramian sum is a distributed
+    * float aggregate whose low-order bits can vary across evaluations;
+    * the memo makes query and twin bit-consistent by construction. */
+  private[graft] def pcaFitCached(s: SparkSession, d: String, k: Int)
+      : (Long, Array[Double], Array[Double], Array[Array[Double]]) =
+    fitted(s, d, "pca", k)(pcaFit(s, d, k))
+
   /** PCA model fit: mean vector + top-k principal components, from ONE
     * corpus pass. The classic augmentation trick folds the mean and the
     * count into the same Gramian — append a constant 1.0 dimension, and
@@ -1072,19 +1080,6 @@ object Similarity {
     * dsyevd, deterministic for a fixed matrix) runs on the covariance
     * assembled from that bounded frame. Eigenvector sign is canonicalized
     * (largest-|component| positive) so the model is reproducible. */
-  /** One fit per dataset (the centroidCache convention — the model is
-    * O(d²) driver state): the PROJECTION QUERY and its generated oracle
-    * SQL must consume the IDENTICAL mean/components, because the fit's
-    * Gramian sum is a distributed float aggregate whose low-order bits
-    * can vary across evaluations — within one Verify JVM the cache makes
-    * query and twin bit-consistent by construction. */
-  private val pcaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Array[Double], Array[Double], Array[Array[Double]])]()
-
-  private[graft] def pcaFitCached(s: SparkSession, d: String, k: Int)
-      : (Long, Array[Double], Array[Double], Array[Array[Double]]) =
-    pcaCache.computeIfAbsent(s"$d#$k", _ => pcaFit(s, d, k))
-
   private[graft] def pcaFit(s: SparkSession, d: String, k: Int)
       : (Long, Array[Double], Array[Double], Array[Array[Double]]) = {
     val dim = 64
@@ -1152,7 +1147,7 @@ object Similarity {
   }
 
   /** DuckDB twin of [[embeddingPcaProject]], GENERATED against the
-    * dataset's cached fit: the same `Double.toString` round-trip-exact
+    * dataset's memoized fit: the same `Double.toString` round-trip-exact
     * component literals and mean-dot offsets, the same sequential-fold
     * dot product ([[annTopkSql]]'s list_reduce/list_transform form), the
     * same round(…, 6). Dataset-dependent by necessity — the whole point
@@ -1266,6 +1261,17 @@ object Similarity {
         col("m.cluster").as("cluster"), col("m.dist").as("dist"))
   }
 
+  /** The Lloyd fit, once per session and table content ([[fitted]]):
+    * three queries (kmeans, cluster_profile, silhouette) consume the
+    * identical model, so the 3-round fit (one corpus scan + k×d collect
+    * per round) is paid once. The fit's means live on the round-6 grid
+    * ([[trainCentroids]] float discipline), so a recomputed fit is
+    * bit-identical to a memoized one: unlike the PCA fit, this one is
+    * memoized purely for cost. */
+  private[graft] def kmeansFitCached(s: SparkSession, d: String,
+                                     k: Int = KmK, iters: Int = KmIters): Array[Array[Float]] =
+    fitted(s, d, "kmeans", (k, iters))(kmeansFit(s, d, k, iters))
+
   /** Euclidean Lloyd k-means fit: `iters` rounds seeded from the first k
     * corpus vectors. Per round: ONE corpus scan (literal-fold assignment,
     * see [[assignKmLit]]) feeding a (cluster, dim) partial aggregate that
@@ -1275,39 +1281,6 @@ object Similarity {
     * discipline: summation-order noise ~1e-15 cannot survive the grid, so
     * the DuckDB twin's unrolled CTEs reproduce the exact same centroids).
     * Clusters that lose all members keep their previous centroid. */
-  /** Per-dataset cache of the Lloyd fit — the sccLabelsCached model-
-    * artifact discipline: three queries (kmeans, cluster_profile,
-    * silhouette) consume the identical model, so the 3-round fit (one
-    * corpus scan + k×d collect per round) is paid once per suite. Safe
-    * for oracle parity BY CONSTRUCTION: the fit's means live on the
-    * round-6 grid ([[trainCentroids]] float discipline), so a recomputed
-    * fit is bit-identical to a cached one — unlike [[pcaCache]], which
-    * exists for bit-consistency, this cache exists purely for cost.
-    *
-    * IMMUTABLE-DATASET ASSUMPTION (r14 advice): every model cache in
-    * this file (this one, [[pcaCache]], [[centroidCache]]) is keyed by
-    * dataset PATH and never invalidated — the contract is that a path's
-    * contents do not change within one JVM session (true for the
-    * driver's read-only testdata and for production's immutable
-    * partitioned snapshots). A session that rewrites data in place must
-    * call [[clearModelCaches]] or the consumers serve stale models. */
-  private val kmeansCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Float]]]()
-
-  /** Explicit invalidation hook for long-lived sessions / tests that
-    * rewrite a dataset path in place (see the immutable-dataset note on
-    * [[kmeansCache]]). */
-  def clearModelCaches(): Unit = {
-    kmeansCache.clear()
-    pcaCache.clear()
-    centroidCache.clear()
-    codebookCache.clear()
-  }
-
-  private[graft] def kmeansFitCached(s: SparkSession, d: String,
-                                     k: Int = KmK, iters: Int = KmIters): Array[Array[Float]] =
-    kmeansCache.computeIfAbsent(s"$d#$k#$iters", _ => kmeansFit(s, d, k, iters))
-
   private[graft] def kmeansFit(s: SparkSession, d: String,
                                k: Int = KmK, iters: Int = KmIters): Array[Array[Float]] = {
     val e = emb(s, d)

@@ -246,27 +246,25 @@ class AnalyticsExtraSpec extends AnyFunSuite {
   // Partition-width invariance for the triangle/peel family and the
   // exact-valued fixpoint loops: cut widths, AQE coalescing and broadcast
   // choices move plan shape, never results — every column of every row
-  // must match at shuffle.partitions 1, 4, 8.
+  // must match at shuffle.partitions 1, 4, 8. Each width runs in its own
+  // session: the memoized SCC and Louvain labels (Tables.memo) are per
+  // session, so width 8 is not answered from width 1's labels.
   private def rowsAtWidth(query: String, width: Int): Seq[String] = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, width.toString)
-    try {
-      val df = SparkEntry.queries(query)(spark, sf)
-      df.select(df.columns.sorted.map(df.col): _*)
-        .collect().map(_.toString).sorted.toSeq
-    } finally spark.conf.set(key, prev)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", width.toString)
+    val df = SparkEntry.queries(query)(s, sf)
+    df.select(df.columns.sorted.map(df.col): _*)
+      .collect().map(_.toString).sorted.toSeq
   }
 
-  // Left out: citation_louvain (+ _stats, _ml) and citation_scc_all
-  // (+ _condensation, _layers) read dataset-keyed label caches, so widths
-  // 4 and 8 would be answered from the width-1 run's labels.
   for (q <- Seq("citation_triangles", "citation_local_clustering",
                 "citation_ktruss", "citation_kcore", "citation_components",
                 "citation_lpa", "citation_mis", "citation_scc",
                 "citation_bfs_paths", "citation_hits", "citation_link_predict",
                 "citation_jaccard", "citation_random_walks", "citation_node2vec",
-                "citation_betweenness", "citation_closeness", "citation_motifs"))
+                "citation_betweenness", "citation_closeness", "citation_motifs",
+                "citation_louvain", "citation_louvain_stats", "citation_louvain_ml",
+                "citation_scc_all", "citation_scc_condensation", "citation_scc_layers"))
     test(s"$q: identical rows at shuffle.partitions 1/4/8") {
       val base = rowsAtWidth(q, 1)
       assert(base.nonEmpty, s"$q returned no rows at sf0.001")

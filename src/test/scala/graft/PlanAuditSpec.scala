@@ -149,10 +149,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // (orphan totals, child totals) fold together — the fact side
     // collapsed to per-key counts before any of this
     "profile_integrity",
-    // (citation_scc_all dropped r13: the label cache landed in r12 —
-    // the decomposition runs once inside sccLabelsCached at construction
-    // time, so this query's own plan is a LogicalRDD read + rollup with
-    // no scalar exchange left)
+    // (citation_scc_all dropped r13: the decomposition runs once inside
+    // sccLabelsCached, memoized per session at construction time, so this
+    // query's own plan is a LogicalRDD read + rollup with no scalar
+    // exchange left)
     // events_scd2_merge: the 1-row max-ts split anchor (the
     // events_survival cutoff shape)
     "events_scd2_merge",
@@ -165,6 +165,23 @@ class PlanAuditSpec extends AnyFunSuite {
     // events_survival cutoff shape)
     "events_ridge"
   )
+
+  // Work shared across queries lives in Tables.memo, keyed on the session
+  // and the content of what it read; the session catalog belongs to the
+  // user. An operator with its own map or a catalog write breaks both.
+  test("operators keep no private cache and write no temp view") {
+    val dir = new java.io.File("src/main/scala/graft/operators")
+    val files = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.endsWith(".scala"))
+    assert(files.nonEmpty, s"no sources under ${dir.getAbsolutePath}")
+    val hits = for {
+      f <- files.toSeq.sortBy(_.getName)
+      (line, i) <- java.nio.file.Files.readString(f.toPath).linesIterator.toSeq.zipWithIndex
+      word <- Seq("createOrReplaceTempView", "createTempView", "ConcurrentHashMap")
+      if line.contains(word)
+    } yield s"${f.getName}:${i + 1}: $word"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 
   test("every query plan: no cartesian, no UDFs, single-partition only where bounded") {
     val plans = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -289,7 +306,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // events_survival: the 1-row observation-cutoff date folded onto
     // every user (the orders_rfm anchor shape)
     "events_survival",
-    // (citation_scc_all dropped r13: behind the r12 label cache its
+    // (citation_scc_all dropped r13: behind the memoized labels its
     // plan is a LogicalRDD read + rollup — the per-extraction scalar
     // folds run once inside sccLabelsCached, not in this query's plan)
     // events_seasonal_decompose: the calendar-bounded day spine
