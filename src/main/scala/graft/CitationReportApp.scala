@@ -24,14 +24,10 @@ object CitationReportApp {
 
   private val TsFormat = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
-  /** Pure pipeline: read → count → top-30 → format → write. */
+  /** Pure pipeline: read → [[Citations.report]] → write. */
   def run(spark: SparkSession, input: String, output: String,
           generatedOn: String): Unit = {
-    val top = Citations.top30(Citations.counts(EdgeListReader.read(spark, input)))
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      .toSeq
-    val report = Citations.formatReport(top, generatedOn)
+    val report = Citations.report(EdgeListReader.read(spark, input), generatedOn)
     val out = Paths.get(output)
     if (out.getParent != null) Files.createDirectories(out.getParent)
     Files.writeString(out, report)

@@ -1,9 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.mutable
 import scala.util.DynamicVariable
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The per-round lifecycle every iterative operator shares.
@@ -23,11 +25,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    their plans: pageRank trades that re-execution against one job per
   *    round at a cadence of 3;
   *  - the metrics: a done-predicate reads counts and sums of a round's
-  *    cut, never an action on it. `cut(df, metric, more*)` attaches a
-  *    Spark `Observation` to the plan it checkpoints, so the row of
-  *    aggregates arrives with the cut's own jobs (a separate `count()` on
-  *    the checkpoint is one to two jobs more per round). A round off the
-  *    cut cadence that asks for metrics cuts anyway: only a
+  *    cut, never an action on it. `cut(df, metric, more*)` observes the
+  *    metrics under a fresh name on the plan it checkpoints and reads the
+  *    row from that plan's own query execution once the eager checkpoint
+  *    returns, so the aggregates arrive with the cut's own jobs (a
+  *    separate `count()` on the checkpoint is one to two jobs more per
+  *    round). It registers no listener and waits on no listener bus. A
+  *    round off the cut cadence that asks for metrics cuts anyway: only a
   *    materialization can deliver them;
   *  - the release: after each round the loop releases every checkpoint it
   *    owns that no frame of the new state still reads (its `LogicalRDD` is
@@ -68,12 +72,14 @@ object Fixpoint {
       * exists only once the frame has been materialized. */
     def cut(df: DataFrame, metric: Column, more: Column*): (DataFrame, Row) = {
       if (firstCut.isEmpty) firstCut = Some(df)
-      val obs = Observation()
+      val name = s"graft_round_${metricNames.incrementAndGet()}"
       // positional names: two metrics may print the same expression
       val named = (metric +: more).zipWithIndex.map { case (m, j) => m.as(s"m$j") }
-      val c = checkpoint(df.observe(obs, named.head, named.tail: _*))
-      val got = obs.get
-      (c, Row.fromSeq(named.indices.map(j => got(s"m$j"))))
+      val observed = df.observe(name, named.head, named.tail: _*)
+      val c = checkpoint(observed)
+      // the eager checkpoint ran as an action on `observed`'s own query
+      // execution, so its metrics row (in argument order) is already filled
+      (c, observed.queryExecution.observedMetrics(name))
     }
 
     private def checkpoint(df: DataFrame): DataFrame = {
@@ -88,6 +94,9 @@ object Fixpoint {
 
     private[Fixpoint] def observed: Option[DataFrame] = seen.orElse(firstCut)
   }
+
+  /** Suffixes of the observed-metric names, unique in the JVM. */
+  private val metricNames = new AtomicLong
 
   private val observer = new DynamicVariable[(Int, DataFrame) => Unit]((_, _) => ())
   private val enclosing = new DynamicVariable[Option[Round]](None)

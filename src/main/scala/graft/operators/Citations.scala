@@ -3488,9 +3488,10 @@ object Citations {
     top30(counts).show(30, truncate = false)
   }
 
-  /** Full pipeline: edges → top30 → report text (collects 30 rows). */
-  def report(spark: SparkSession, sfDir: String, generatedOn: String): String = {
-    val rows = top30(counts(edges(spark, sfDir)))
+  /** The flagship pipeline after the read: edges → counts → top 30 →
+    * report text (collects 30 rows). */
+  def report(edges: DataFrame, generatedOn: String): String = {
+    val rows = top30(counts(edges))
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
       .toSeq

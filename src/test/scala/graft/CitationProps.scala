@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
@@ -108,18 +109,31 @@ object CitationProps extends Properties("Citations") {
     1 -> Gen.oneOf("\t", "\t\t", "a\t", "\tb", "a\tb\t", "\ta\tb", "  #x\ty",
       "#\tz", " ", ""))
 
+  // Three paths: `parse` on a local literal frame (the optimizer folds it
+  // through the kernels' interpreted `eval`), `read` on a text file of the
+  // same lines (their generated code, inside whole-stage codegen), and the
+  // quarantine, whose good and bad rows together are every line that is
+  // neither a comment nor blank.
   property("reader keeps exactly the lines of two fields after a space-only trim") =
     forAll(Gen.listOf(rawLineGen).map(_.take(300))) { lines =>
       import spark.implicits._
       def stripSpaces(l: String) = l.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
-      val expected = lines
-        .filter(l => !l.startsWith("#"))
-        .map(l => stripSpaces(l).split("\t", -1))
-        .filter(_.length == 2)
-        .map(f => (f(0), f(1)))
-      val got = EdgeListReader.parse(lines.toDF("value"))
-        .as[(String, String)].collect().toList
-      got.sorted == expected.sorted
+      val content = lines.filter(l => !l.startsWith("#") && stripSpaces(l).nonEmpty)
+      val (keptLines, badLines) = content.partition(stripSpaces(_).split("\t", -1).length == 2)
+      val expected = keptLines.map { l =>
+        val f = stripSpaces(l).split("\t", -1)
+        (f(0), f(1))
+      }.sorted
+      def pairs(df: DataFrame) = df.as[(String, String)].collect().toList.sorted
+      val file = java.nio.file.Files.createTempFile("snap-prop", ".txt")
+      try {
+        java.nio.file.Files.writeString(file, lines.map(_ + "\n").mkString)
+        val (good, bad) = EdgeListReader.parseWithQuarantine(lines.toDF("value"))
+        pairs(EdgeListReader.parse(lines.toDF("value"))) == expected &&
+          pairs(EdgeListReader.read(spark, file.toString)) == expected &&
+          pairs(good) == expected &&
+          bad.select("raw_line").as[String].collect().toList.sorted == badLines.sorted
+      } finally java.nio.file.Files.delete(file)
     }
 
   // k-truss: random multigraphs (dups/self-loops forced by the small

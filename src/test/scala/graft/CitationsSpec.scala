@@ -122,6 +122,20 @@ class CitationsSpec extends AnyFunSuite {
       lines.count(l => !l.startsWith("#") && l.exists(_ != ' ')))
   }
 
+  test("the SNAP scan's filter and projection stay in whole-stage codegen") {
+    val counts = Citations.counts(EdgeListReader.read(spark, fixturePath))
+    counts.collect() // AQE prints its codegen stages once it has run
+    val plan = counts.queryExecution.executedPlan.toString
+    // whole-stage-codegen'd operators print with a `*(stageId)` star; a
+    // CodegenFallback expression would strip it from its operator
+    def starred(op: String, kernel: String) = plan.linesIterator.exists(l =>
+      l.contains("*(") && l.contains(op) && l.contains(kernel))
+    assert(starred("Filter", "snap_kept"), s"reader Filter not codegen'd:\n$plan")
+    assert(starred("Project", "snap_dst"), s"reader Project not codegen'd:\n$plan")
+    for (builtin <- Seq("substring_index", "instr(", "UDF"))
+      assert(!plan.contains(builtin), s"$builtin in the scan:\n$plan")
+  }
+
   test("showTop30 prints the ranked table to the console (O16)") {
     val baos = new java.io.ByteArrayOutputStream()
     Console.withOut(baos) {

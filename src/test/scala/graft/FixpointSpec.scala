@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, count_if, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
@@ -113,6 +121,28 @@ class FixpointSpec extends AnyFunSuite {
       c
     }
     assert(empty.count() === 0L)
+  }
+
+  test("after an observed cut a failing query fails alone, with no listener error") {
+    Fixpoint.rounds(1, start)((r, df) => r.cut(df, count(lit(1)))._1).count()
+    // the query-execution listeners run on the listener bus's shared queue,
+    // which jobsOf drains; a listener that throws is logged here
+    val bus = LogManager.getLogger("org.apache.spark.sql.util.ExecutionListenerBus")
+      .asInstanceOf[Logger]
+    val logged = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("fixpoint-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    bus.addAppender(appender)
+    val missing = java.nio.file.Files.createTempDirectory("fixpoint-spec")
+      .resolve("missing").toString
+    val (e, _) = try jobsOf(intercept[AnalysisException](spark.read.parquet(missing)))
+      finally { bus.removeAppender(appender); appender.stop() }
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    assert(logged.isEmpty, logged.asScala.mkString("\n"))
   }
 
   test("after return only the returned frame's checkpoints stay persisted") {
